@@ -99,28 +99,23 @@ object AdversarialStress {
   }
 
   def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def hygiene(): Unit = {
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      System.gc()
+    val baseDir = args.headOption.getOrElse(Harness.sfDir)
+    val spark = Harness.session()
+    // Each corpus is staged to parquet, not localCheckpointed: the
+    // hygiene between operators unpersists every persistent RDD, and a
+    // checkpoint's blocks cannot be recomputed once dropped.
+    val stageRoot = java.nio.file.Files.createTempDirectory("graft_adv_").toString
+    def staged(df: DataFrame, name: String): DataFrame = {
+      df.write.mode("overwrite").parquet(s"$stageRoot/$name")
+      spark.read.parquet(s"$stageRoot/$name")
     }
 
     println(f"${"C"}%6s ${"op"}%-22s ${"rows"}%12s ${"secs"}%8s  note")
     for (c <- Seq(125, 250, 500, 1000)) {
-      val df = corpus(spark, baseDir, c).localCheckpoint(true)
+      val df = staged(corpus(spark, baseDir, c), s"docs_$c")
 
       // --- lshBucketStats: the accounting frame ---
-      hygiene()
+      Harness.hygiene(spark)
       val stats = Dedup.lshBucketStats(df, "doc_id", "text", maxBucket = 64)
         .agg(max(col("n")).as("max_bucket"),
           sum("unbounded_pairs").cast("long").as("ub"),
@@ -130,14 +125,14 @@ object AdversarialStress {
         s"max_bucket=${stats.get(0)} unbounded_mass=${stats.getLong(1)} bounded_mass=${stats.getLong(2)}")
 
       // --- q23 family: unbounded pairs (the blowup) ---
-      hygiene()
+      Harness.hygiene(spark)
       val (tU, nU) = timed {
         Dedup.minhashLshPairs(df, "doc_id", "text", threshold = 0.5).count()
       }
       println(f"$c%6d ${"lsh_unbounded"}%-22s $nU%12d $tU%8.2f  pairs ~ 5*C(C,2) expected=${5L * c * (c - 1) / 2}")
 
       // --- round-13 guard: bounded star ---
-      hygiene()
+      Harness.hygiene(spark)
       val (tB, nB) = timed {
         Dedup.minhashLshPairsBounded(df, "doc_id", "text",
           threshold = 0.5, maxBucket = 64).count()
@@ -152,7 +147,7 @@ object AdversarialStress {
         f"mem=${si.map(_.memSize).sum / 1048576.0}%.1fMB disk=${si.map(_.diskSize).sum / 1048576.0}%.1fMB nRdd=${si.length}")
 
       // --- q158 family: components over bounded pairs ---
-      hygiene()
+      Harness.hygiene(spark)
       val (tC, compSizes) = timed {
         val pairs = Dedup.minhashLshPairsBounded(df, "doc_id", "text",
           threshold = 0.5, maxBucket = 64)
@@ -169,7 +164,7 @@ object AdversarialStress {
       // UNBOUNDED pairs; if the histograms match, the guard costs
       // zero connectivity on this corpus and the residual misses are
       // banding recall (shared by both forms).
-      hygiene()
+      Harness.hygiene(spark)
       val compSizesU = {
         val pairs = Dedup.minhashLshPairs(df, "doc_id", "text", threshold = 0.5)
         Components.connectedComponents(pairs, "id_a", "id_b")
@@ -181,7 +176,7 @@ object AdversarialStress {
         s"size->n ${compSizesU.mkString(",")} (loss attribution vs bounded)")
 
       // --- q336 family: cross decontamination, |eval|=100 ---
-      hygiene()
+      Harness.hygiene(spark)
       val evalSet = df.filter(
         (col("doc_id") >= 10000000L && pmod(col("doc_id"), lit(100000L)) < 10) ||
           (col("doc_id") >= 100 && col("doc_id") < 150))
@@ -193,7 +188,7 @@ object AdversarialStress {
       println(f"$c%6d ${"cross_decontam"}%-22s $nX%12d $tX%8.2f  ~ 50*C expected=${50L * c} (linear in C)")
 
       // --- q106 family: PPJoin prefix self-join ---
-      hygiene()
+      Harness.hygiene(spark)
       val (tP, pp) = timed {
         val sig = df.select(col("doc_id"),
           graft.expr.ShingleExpression.shingleHashes(col("text"), 3).as("sh"))
@@ -216,23 +211,23 @@ object AdversarialStress {
     // determinism argument) while components still reassemble the 5
     // clusters of C+1.
     for (c <- Seq(250, 500, 1000, 2000)) {
-      val df = embCorpus(spark, baseDir, c).localCheckpoint(true)
+      val df = staged(embCorpus(spark, baseDir, c), s"emb_$c")
 
-      hygiene()
+      Harness.hygiene(spark)
       val (tU, nU) = timed {
         Dedup.embeddingPairsLshBanded(df, "id", "v", dim = 64,
           threshold = 1.0).count()
       }
       println(f"$c%6d ${"emb_lsh_unbounded"}%-22s $nU%12d $tU%8.2f  pairs ~ 5*C(C+1,2) expected=${5L * (c + 1) * c / 2}")
 
-      hygiene()
+      Harness.hygiene(spark)
       val (tB, nB) = timed {
         Dedup.embeddingPairsLshBandedBounded(df, "id", "v", dim = 64,
           threshold = 1.0, maxBucket = 64).count()
       }
       println(f"$c%6d ${"emb_lsh_bounded"}%-22s $nB%12d $tB%8.2f  star ~ 5*C expected=${5L * c}")
 
-      hygiene()
+      Harness.hygiene(spark)
       val (tC, compSizes) = timed {
         val pairs = Dedup.embeddingPairsLshBandedBounded(df, "id", "v",
           dim = 64, threshold = 1.0, maxBucket = 64)

@@ -1,20 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up the JVM/Spark stack (class loading, codegen infra, parquet
-    // reader init) so the first timed query doesn't absorb ~15-20s of
-    // one-time cost and misrepresent per-query numbers.
-    spark.read.parquet(s"$sfDir/region.parquet")
-      .groupBy("r_name").count().collect()
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     // r14 (verdict item: the sweep swallowed per-query failures — a
     // query that starts failing records its time-to-failure and the
     // sweep still exits 0): failures are now counted into the JSON
@@ -23,46 +12,15 @@ object Bench {
     // sweep total remains comparable); correctness still belongs to
     // Verify/oracle.
     val sweepFails = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        // noop sink materializes the FULL plan (count() would let the
-        // optimizer elide final sorts and unreferenced columns).
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          sweepFails += name
-          System.err.println(
-            s"BENCH_FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Inter-query hygiene, OUTSIDE the timed region: queries that
-        // persist/localCheckpoint intermediates (q23/q53 LSH cache, CC
-        // per-round checkpoints, IVF index) would otherwise leave
-        // blocks pinned in the block manager for the remaining ~100
-        // queries — accumulated pressure shows up as phantom
-        // regressions in whichever queries run late. A periodic GC
-        // nudges the ContextCleaner to reap dropped broadcasts too.
-        // hygiene is IDENTICAL for every query (a periodic-only GC gave
-        // whichever query followed it a privileged just-collected heap).
-        CacheRegistry.releaseAll()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
-        name -> dt
+    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val run = Harness.cold(spark, name, sfDir)
+      run.error.foreach { e =>
+        sweepFails += name
+        System.err.println(
+          s"BENCH_FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+      name -> run.wall
     }
-    // The harness that captures this output keeps only a bounded tail of
-    // the log (last ~2000 chars, with sbt's [success] line eating ~61).
-    // A {"qNN":cs} dict crossed that budget at ~185 queries (r4's format
-    // measured 1854 chars at 178), so per-query times are now a VALUES
-    // ARRAY in integer centiseconds ("qunit":"cs"), aligned with the
-    // ASCII-sorted qNN short names ("qkeys" documents this; ASCII sort
-    // of qNN prefixes is identical in Scala and python sorted()). ~4.3
-    // chars/query keeps the line parseable past 350 queries. Full names
-    // + precise seconds still go to stderr for humans (BENCH_DETAIL).
-    val short = (k: String) => if (k.matches("q\\d+_.*")) k.takeWhile(_ != '_') else k
-    val qv = results.map { case (k, v) => short(k) -> math.round(v * 100) }
-      .sortBy(_._1)
-      .map(_._2).mkString("[", ",", "]")
     val total = results.map(_._2).sum
     results.foreach { case (k, v) => System.err.println(f"BENCH_DETAIL $k $v%.3f") }
     System.err.flush()
@@ -73,7 +31,7 @@ object Bench {
     // residents serially (3 cold reps each, Bench-identical hygiene,
     // median) and ship both the raw sweep total and the cold-adjusted
     // total IN the artifact, so the trended number carries its own
-    // de-noising instead of needing an out-of-band DebugBench session.
+    // de-noising instead of needing an out-of-band profiling session.
     // Round 13: the cold set is TOP-25 (was 10) — the host's measured
     // 34-43% same-code ambient swings exceed any code effect in the
     // raw sweep, so interleaved cold medians are the CANONICAL
@@ -93,18 +51,10 @@ object Bench {
     // if every rep failed).
     val repTimes = scala.collection.mutable.Map.empty[String, List[Double]]
     for (r <- 1 to 3; (name, _) <- top10) {
-      val fn = SparkEntry.queries(name)
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        repTimes(name) = dt :: repTimes.getOrElse(name, Nil)
-      } catch {
-        case e: Throwable => System.err.println(
+      val run = Harness.cold(spark, name, sfDir)
+      run.error match {
+        case None => repTimes(name) = run.wall :: repTimes.getOrElse(name, Nil)
+        case Some(e) => System.err.println(
           s"BENCH_COLD_FAIL $name rep$r: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
@@ -117,16 +67,41 @@ object Bench {
     cold10.foreach { case (k, v) => System.err.println(f"BENCH_COLD $k $v%.3f") }
     System.err.flush()
     val coldAdj = total - top10.map(_._2).sum + cold10.map(_._2).sum
-    // c10 keys are qNN short names, values integer centiseconds (same
-    // budget discipline as qv; ~12 chars/entry keeps the line <2000).
-    // Only the 10 heaviest of the 25-query cold set are serialized.
-    val c10 = cold10.take(10).map { case (k, v) => s""""${short(k)}":${math.round(v * 100)}""" }
-      .mkString("{", ",", "}")
-    // "cold_basis" PINS total_cold_adj's definition (r14, verdict
-    // item: r12 re-based the top-10 on cold medians, r13 the top-25 —
-    // the two values must not be trended across that change; from r13
-    // on the basis is top-25 permanently and the artifact says so).
-    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","total_cold_adj":$coldAdj%.2f,"cold_basis":"top25-cold-medians-since-r13","fails":${sweepFails.size},"c10":$c10,"qunit":"cs","nq":${results.size},"qkeys":"ASCII-sorted qNN prefixes of SparkEntry.queries keys","qv":$qv,"sf":"$sfDir"}""")
+    println(line(total, coldAdj, sweepFails.size, cold10, results, sfDir))
     spark.stop()
+  }
+
+  /** Bench's one stdout line is parsed downstream, so its keys, their
+    * order, and the `qv`/`c10` layouts stay byte-compatible.
+    *
+    * The harness that captures this output keeps only a bounded tail of
+    * the log (last ~2000 chars, with sbt's [success] line eating ~61).
+    * A {"qNN":cs} dict crossed that budget at ~185 queries (r4's format
+    * measured 1854 chars at 178), so per-query times are a VALUES
+    * ARRAY in integer centiseconds ("qunit":"cs"), aligned with the
+    * ASCII-sorted qNN short names ("qkeys" documents this; ASCII sort
+    * of qNN prefixes is identical in Scala and python sorted()). ~4.3
+    * chars/query keeps the line parseable past 350 queries. Full names
+    * + precise seconds go to stderr for humans (BENCH_DETAIL).
+    *
+    * `cold` is the cold set in sweep-descending order; c10 keys are
+    * qNN short names, values integer centiseconds (same budget
+    * discipline as qv; ~12 chars/entry keeps the line <2000). Only its
+    * 10 heaviest entries are serialized.
+    *
+    * "cold_basis" PINS total_cold_adj's definition (r14, verdict
+    * item: r12 re-based the top-10 on cold medians, r13 the top-25 —
+    * the two values must not be trended across that change; from r13
+    * on the basis is top-25 permanently and the artifact says so).
+    */
+  def line(total: Double, coldAdj: Double, fails: Int,
+      cold: Seq[(String, Double)], sweep: Seq[(String, Double)], sfDir: String): String = {
+    val short = (k: String) => if (k.matches("q\\d+_.*")) k.takeWhile(_ != '_') else k
+    val qv = sweep.map { case (k, v) => short(k) -> math.round(v * 100) }
+      .sortBy(_._1)
+      .map(_._2).mkString("[", ",", "]")
+    val c10 = cold.take(10).map { case (k, v) => s""""${short(k)}":${math.round(v * 100)}""" }
+      .mkString("{", ",", "}")
+    f"""{"metric":"total","value":$total%.2f,"unit":"sec","total_cold_adj":$coldAdj%.2f,"cold_basis":"top25-cold-medians-since-r13","fails":$fails,"c10":$c10,"qunit":"cs","nq":${sweep.size},"qkeys":"ASCII-sorted qNN prefixes of SparkEntry.queries keys","qv":$qv,"sf":"$sfDir"}"""
   }
 }

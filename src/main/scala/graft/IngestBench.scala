@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.expr.PipelineConfig
@@ -48,18 +47,11 @@ import graft.schema.SchemaProvider
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir
     val streamCounts = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "1,2,4")
       .split(",").map(_.trim.toInt).toSeq
     val batchSize = 25000L // main.py:569 — the reference's optimum
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // Stage the topic (untimed): one JSON message per event row,
     // partitioned by micro-batch id so each poll is a pruned scan, and

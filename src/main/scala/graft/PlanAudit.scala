@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-smell audit over every registered query: counts the physical
   * operators that decide 100 TB viability. Rows are flagged when they
   * contain a nested-loop/cartesian join or a global (un-partitioned)
@@ -10,15 +8,8 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = args.headOption.getOrElse(Harness.sfDir)
+    val spark = Harness.session()
     val smells = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
     println(f"${"query"}%-24s ex  bhj smj shj bnl cart win  flags")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

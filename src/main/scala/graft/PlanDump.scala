@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for named queries to files — the
@@ -18,14 +17,8 @@ object PlanDump {
     val names: Seq[String] =
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
     for (n <- names) {
       try {
@@ -38,9 +31,7 @@ object PlanDump {
         case e: Throwable =>
           System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.hygiene(spark)
     }
     spark.stop()
   }

@@ -23,13 +23,8 @@ object Probe {
     } catch { case e: Exception => println(s"[probe] failed: ${e.getMessage}"); false }
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val dir = args.headOption.getOrElse(Harness.sfDir)
+    val spark = Harness.session()
     val ok =
       try check(spark, dir)
       finally spark.stop()

@@ -69,22 +69,14 @@ object QueryBench {
       .map("%02x".format(_)).mkString
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir
     // Default axis brackets the measured knee (~16-24, PERF_LEDGER).
     val runnerCounts = sys.env.getOrElse("SPARK_GRAFT_RUNNERS", "1,8,16,24")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // FAIR scheduling: the multi-tenant pool shape — a long graph
-      // fixpoint must not starve a sibling's point query, which is the
-      // first thing FIFO does under concurrent submitters.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // FAIR scheduling: the multi-tenant pool shape — a long graph
+    // fixpoint must not starve a sibling's point query, which is the
+    // first thing FIFO does under concurrent submitters.
+    val spark = Harness.session("spark.scheduler.mode" -> "FAIR")
 
     /** Execute one mix query on the given (per-tenant) session in its
       * own cache scope; returns the result fingerprint. collect() is

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke check: run SparkEntry.entry on sf0.001
   * and assert rows>0. Also prints the plan head + a sample for eyeball
   * verification. Usage: sbt "runMain graft.Smoke".
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows = $n")

@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -57,18 +56,11 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/tmp/graft_scale10x")
     val nFiles = if (args.length > 1) args(1).toInt else 300
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
     // --- stage the long topic: N ts-range files, written in order ---
     val ev = StatefulSessions.project(

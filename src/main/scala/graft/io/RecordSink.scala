@@ -128,6 +128,30 @@ object IdempotentParquetSink {
   }
 }
 
+/** The insert path both JDBC sinks share: one INSERT naming every
+  * column, rows bound positionally and flushed every `batchSize`. The
+  * caller owns the connection and its transaction.
+  */
+private object JdbcInsert {
+  def sql(table: String, cols: Seq[String]): String =
+    s"INSERT INTO $table (${cols.mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
+
+  def batched(conn: java.sql.Connection, sql: String,
+      rows: Iterator[org.apache.spark.sql.Row], batchSize: Int): Unit = {
+    val st = conn.prepareStatement(sql)
+    var pending = 0
+    rows.foreach { r =>
+      var i = 0
+      while (i < r.length) { st.setObject(i + 1, r.get(i)); i += 1 }
+      st.addBatch()
+      pending += 1
+      if (pending >= batchSize) { st.executeBatch(); pending = 0 }
+    }
+    if (pending > 0) st.executeBatch()
+  }
+}
+
 /** LIVE JDBC insert sink — S8's executable form (main.py:305-356): the
   * reference pushes each batch into ClickHouse with `insert_arrow` in
   * 25k-row batches; here the same contract runs as per-partition
@@ -155,25 +179,14 @@ final class JdbcRowSink(url: String, table: String, batchSize: Int = 25000)
   def write(df: DataFrame): Boolean = {
     // locals only: the task closure must not drag `this` across
     // serialization.
-    val (u, t, bs) = (url, table, batchSize)
-    val cols = df.columns.toSeq
-    val insertSql = s"INSERT INTO $t (${cols.mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
+    val (u, bs) = (url, batchSize)
+    val insertSql = JdbcInsert.sql(table, df.columns.toSeq)
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.hasNext) {
         val conn = java.sql.DriverManager.getConnection(u)
         try {
           conn.setAutoCommit(false)
-          val st = conn.prepareStatement(insertSql)
-          var pending = 0
-          rows.foreach { r =>
-            var i = 0
-            while (i < cols.length) { st.setObject(i + 1, r.get(i)); i += 1 }
-            st.addBatch()
-            pending += 1
-            if (pending >= bs) { st.executeBatch(); pending = 0 }
-          }
-          if (pending > 0) st.executeBatch()
+          JdbcInsert.batched(conn, insertSql, rows, bs)
           conn.commit()
         } finally conn.close()
       }
@@ -209,10 +222,8 @@ final class IdempotentJdbcSink(url: String, table: String,
   def write(df: DataFrame): Boolean = write(df, -1L)
 
   override def write(df: DataFrame, batchId: Long): Boolean = {
-    val (u, t, lt, bs, bid) = (url, table, ledgerTable, batchSize, batchId)
-    val cols = df.columns.toSeq
-    val insertSql = s"INSERT INTO $t (${cols.mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
+    val (u, lt, bs, bid) = (url, ledgerTable, batchSize, batchId)
+    val insertSql = JdbcInsert.sql(table, df.columns.toSeq)
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.hasNext) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -234,16 +245,7 @@ final class IdempotentJdbcSink(url: String, table: String,
                 conn.rollback(); false
             }
           if (claimed) {
-            val st = conn.prepareStatement(insertSql)
-            var pending = 0
-            rows.foreach { r =>
-              var i = 0
-              while (i < cols.length) { st.setObject(i + 1, r.get(i)); i += 1 }
-              st.addBatch()
-              pending += 1
-              if (pending >= bs) { st.executeBatch(); pending = 0 }
-            }
-            if (pending > 0) st.executeBatch()
+            JdbcInsert.batched(conn, insertSql, rows, bs)
             conn.commit() // ledger claim + data rows land atomically
           }
         } finally conn.close() // uncommitted work rolls back

@@ -98,8 +98,9 @@ object SetSimJoin {
 
   /** Stage 1 of the PPJoin pipeline: normalize to (id, els, n, plen)
     * and EAGERLY checkpoint (this frame feeds the prefix explode and
-    * both verify sides). Exposed so FlipProfile can time the join's
-    * three stages independently — same plan as the fused entry point.
+    * both verify sides). Exposed so ScaleRehearsal.components can time
+    * the join's three stages independently — same plan as the fused
+    * entry point.
     */
   def prefixIndexed(
       docs: DataFrame,

@@ -275,13 +275,26 @@ private[graft] trait QueriesShared { this: Queries.type =>
     */
   private[graft] val stageCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stageLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** The build runs under a per-key lock, not inside
+    * `computeIfAbsent`: a build may stage another key (the BPE merges
+    * read the staged word counts), and a nested `computeIfAbsent` on
+    * the same map throws "Recursive update" whenever both keys land in
+    * one bin.
+    */
   private[graft] def stagedParquet(key: String)(build: String => Unit): String =
-    stageCache.computeIfAbsent(key, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_stage_").toString
-      build(d)
-      d
-    })
+    Option(stageCache.get(key)).getOrElse {
+      stageLocks.computeIfAbsent(key, _ => new Object).synchronized {
+        Option(stageCache.get(key)).getOrElse {
+          val d = java.nio.file.Files.createTempDirectory("graft_stage_").toString
+          build(d)
+          stageCache.put(key, d)
+          d
+        }
+      }
+    }
 
   /** The click/purchase topic pair behind q328/q333: clicks and
     * purchases re-serialized to two staged parquet topics, each

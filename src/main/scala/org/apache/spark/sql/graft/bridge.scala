@@ -49,4 +49,12 @@ object bridge {
       val row = scala.concurrent.Await.result(o.future, timeoutMs.millis)
       Some(row.getValuesMap[Any](row.schema.fieldNames.toSeq))
     } catch { case _: java.util.concurrent.TimeoutException => None }
+
+  /** Block until every listener event posted so far has been
+    * delivered (`listenerBus` is private[spark]). Throws
+    * TimeoutException past the deadline — a listener that is still
+    * behind would under-report what it counts.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }
