@@ -34,12 +34,11 @@ import graft.schema.SchemaProvider
   * Spark-native scaling claim made measurable; set
   * SPARK_GRAFT_STREAMS (default "1,2,4") to choose the axis.
   *
-  * Accounting contract: every staged batch is non-empty by
-  * construction, so after a successful `processBatch` the observation
-  * count must exist — a None is METRIC LOSS (a lost listener event,
-  * BatchOrchestrator logs it), and the bench fails fast with that
-  * diagnosis instead of counting 0 and later mis-blaming the sink in
-  * the `sunk == rows` reconciliation.
+  * Accounting contract: every staged batch holds valid rows and every
+  * epoch is fresh, so after a successful `processBatch` the valid count
+  * must exist — a None means the insert was skipped, and the bench
+  * fails fast with that diagnosis instead of counting 0 and later
+  * mis-blaming the sink in the `sunk == rows` reconciliation.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *   sbt "runMain graft.IngestBench"
@@ -101,16 +100,15 @@ object IngestBench {
     }
 
     /** One full pass of the topic through ONE pipeline; returns the
-      * observed valid-row total, failing fast on metric loss.
+      * counted valid-row total, failing fast on a skipped insert.
       */
     def drive(orch: BatchOrchestrator): Long = {
       var rows = 0L
       (0L until nBatches).foreach { b =>
         orch.processBatch(poll(b), b)
         rows += orch.lastStats.flatMap(_.validRows).getOrElse {
-          sys.error(s"batch $b: write completed but its observation " +
-            "count never arrived — METRIC LOSS (lost listener event), " +
-            "not a sink mismatch; see the orchestrator's stderr log")
+          sys.error(s"batch $b: no valid-row count — the insert was " +
+            "skipped (no valid rows, or an epoch the sink already holds)")
         }
       }
       rows
@@ -122,7 +120,7 @@ object IngestBench {
 
     /** N concurrent pipelines, each a full pass over the topic; returns
       * (total rows across streams, wall seconds). Each stream's sink is
-      * reconciled against its own observed count.
+      * reconciled against its own counted rows.
       */
     def run(nStreams: Int): (Long, Double) = {
       val pipes = Seq.fill(nStreams)(freshOrchestrator())
@@ -142,9 +140,8 @@ object IngestBench {
       pipes.zipWithIndex.foreach { case ((_, sinkDir), i) =>
         val sunk = spark.read.parquet(sinkDir).count()
         require(sunk == results(i) && results(i) > 0,
-          s"stream $i: sink holds $sunk rows but observations counted " +
-            s"${results(i)} — rows LOST IN THE SINK (observations were " +
-            "verified per batch; this is a write bug, not metric loss)")
+          s"stream $i: sink holds $sunk rows but the batch passes counted " +
+            s"${results(i)} — rows LOST IN THE SINK (a write bug)")
       }
       (results.sum, dt)
     }

@@ -45,9 +45,10 @@ final case class PipelineConfig(
   * Input representation: each Kafka/JSON record is parsed once with
   * `try_parse_json` into a VARIANT; fields are extracted with
   * `variant_get`. VARIANT preserves JSON token types (string vs number
-  * vs null vs missing), which the coercion branches need:
-  *   - SQL NULL from `variant_get`  ⇔ key missing in the row
-  *   - `is_variant_null`            ⇔ key present with JSON null
+  * vs null vs missing), which the coercion branches read from each
+  * field's kind code ([[Validation.kindOf]]):
+  *   - SQL NULL kind                ⇔ key missing in the row
+  *   - [[Validation.KVoid]]         ⇔ key present with JSON null
   * The reference sees both as Polars null (missing keys become null when
   * the dict list is columnarized), so branches treat them identically;
   * we keep the distinction available but collapse it the same way.
@@ -61,12 +62,11 @@ object Coercions {
   def field(v: Column, name: String): Column = variant_get(v, path(name), "variant")
 
   /** Present = key exists with a non-null JSON value (what the
-    * reference's `pl.col(c).is_null()` is false for, main.py:277, 284).
+    * reference's `pl.col(c).is_null()` is false for, main.py:277, 284),
+    * read from the field's kind code ([[Validation.kindOf]]): NULL when
+    * the key is missing, [[Validation.KVoid]] for a JSON null.
     */
-  def presentNonNull(v: Column, name: String): Column = {
-    val f = field(v, name)
-    f.isNotNull && !is_variant_null(f)
-  }
+  def presentNonNull(kind: Column): Column = kind > lit(Validation.KVoid)
 
   private def epochLit(target: DataType): Column = target match {
     case DateType => lit(CHType.EpochDate)
@@ -130,9 +130,9 @@ object Coercions {
     * STRING_ENUM_COLUMNS overrides the meta target type (SURVEY §2.3
     * note 2).
     */
-  def stringEnumExpr(v: Column, m: ColumnMeta): Column =
-    when(!presentNonNull(v, m.name), lit("DEFAULT"))
-      .otherwise(try_variant_get(v, path(m.name), "string"))
+  def stringEnumExpr(v: Column, kind: Column, m: ColumnMeta): Column =
+    when(presentNonNull(kind), try_variant_get(v, path(m.name), "string"))
+      .otherwise(lit("DEFAULT"))
       .alias(m.name)
 
   /** Generic branch (main.py:284): fill-before-cast —
@@ -143,9 +143,9 @@ object Coercions {
     * which would wrongly default-fill cast failures (SURVEY §2.3
     * note 3).
     */
-  def genericExpr(v: Column, m: ColumnMeta): Column =
-    when(!presentNonNull(v, m.name), lit(m.default).cast(m.dataType))
-      .otherwise(try_variant_get(v, path(m.name), m.dataType.catalogString))
+  def genericExpr(v: Column, kind: Column, m: ColumnMeta): Column =
+    when(presentNonNull(kind), try_variant_get(v, path(m.name), m.dataType.catalogString))
+      .otherwise(lit(m.default).cast(m.dataType))
       .alias(m.name)
 
   /** Missing-column branch (main.py:296-298): the key is absent from the
@@ -158,22 +158,32 @@ object Coercions {
     lit(m.default).cast(m.dataType).alias(m.name)
 
   /** The full select-list for one batch: one expression per sink column,
-    * in schema order (defines output order, main.py:302). `batchPresent`
+    * in schema order (defines output order, main.py:302). `kinds` holds
+    * each column's kind code, aligned with `metas`. `batchPresent`
     * is the set of keys that appear in ≥1 row of the batch (the Polars
     * `source_df.columns` analogue, main.py:265); pass `None` to treat
     * every column as present (per-row semantics only).
     */
   def selectList(
       v: Column,
+      kinds: Seq[Column],
       metas: Seq[ColumnMeta],
       cfg: PipelineConfig,
       batchPresent: Option[Set[String]]): Seq[Column] =
-    metas.map { m =>
+    metas.zip(kinds).map { case (m, kind) =>
       val lower = m.name.toLowerCase
       val inBatch = batchPresent.forall(_.contains(m.name))
       if (cfg.compatBatchPresence && !inBatch) missingExpr(m)
       else if (cfg.datetimeLower.contains(lower)) datetimeExpr(v, m)
-      else if (cfg.stringEnumLower.contains(lower)) stringEnumExpr(v, m)
-      else genericExpr(v, m)
+      else if (cfg.stringEnumLower.contains(lower)) stringEnumExpr(v, kind, m)
+      else genericExpr(v, kind, m)
     }
+
+  /** [[selectList]] over kind codes read straight from the variant. */
+  def selectList(
+      v: Column,
+      metas: Seq[ColumnMeta],
+      cfg: PipelineConfig,
+      batchPresent: Option[Set[String]]): Seq[Column] =
+    selectList(v, metas.map(m => Validation.kindOf(v, m.name)), metas, cfg, batchPresent)
 }

@@ -17,15 +17,12 @@ trait RecordSink {
     * Streaming redelivers the whole batch on retry (at-least-once,
     * main.py:525-526 commit-after-process contract).
     *
-    * Returns whether a Spark ACTION ran over `df` — the telemetry
-    * contract: the orchestrator attaches `Dataset.observe` metrics to
-    * `df`, and the Observation latches onto the FIRST action's counts.
-    * A sink must therefore (a) never run a probing Dataset action
-    * (like `df.isEmpty`, whose limit-1 scan would latch the
-    * observation at 1 row — use [[RecordSink.probeEmpty]], which runs
-    * at the RDD level below the listener's sight) and (b) report
-    * honestly whether its real action ran, so a skipped write reads as
-    * None, never a blocking wait for metrics that will not come.
+    * Returns whether the write ran — the telemetry contract: the
+    * orchestrator reports its counted rows only for a write that ran,
+    * and a skipped one (a redelivered epoch) as None. The orchestrator
+    * has already counted `df` and never hands a sink an empty side, so
+    * a sink needs no emptiness probe of its own: a probe would be one
+    * more Spark job per write, planning `df` a second time.
     */
   def write(df: DataFrame): Boolean
 
@@ -38,34 +35,17 @@ trait RecordSink {
   def write(df: DataFrame, batchId: Long): Boolean = write(df)
 }
 
-object RecordSink {
-  /** Emptiness probe that is INVISIBLE to `Dataset.observe`: runs the
-    * physical plan as an RDD take(1) (no SQL-execution listener event,
-    * so a pending Observation still latches the real write's counts —
-    * `df.isEmpty` here silently capped every observed batch count at
-    * the probe's 1 row). The probe's own CollectMetrics accumulators
-    * belong to this QueryExecution instance and never mix with the
-    * write's.
-    */
-  private[io] def probeEmpty(df: DataFrame): Boolean =
-    df.queryExecution.toRdd.isEmpty()
-}
-
 /** Parquet append sink — the harness stand-in for ClickHouse (S8).
-  * Empty batches are skipped with no write, matching the reference's
-  * empty-batch no-op (main.py:337-339).
+  * Empty batches never reach it: the orchestrator skips them, matching
+  * the reference's empty-batch no-op (main.py:337-339).
   */
 final class ParquetSink(path: String) extends RecordSink {
-  def write(df: DataFrame): Boolean =
-    if (RecordSink.probeEmpty(df)) false
-    else { df.write.mode("append").parquet(path); true }
+  def write(df: DataFrame): Boolean = { df.write.mode("append").parquet(path); true }
 }
 
 /** DLQ sink (S9): persists `{row, error}` envelopes (main.py:358-384). */
 final class ParquetDlqSink(path: String) extends RecordSink {
-  def write(df: DataFrame): Boolean =
-    if (RecordSink.probeEmpty(df)) false
-    else { df.write.mode("append").parquet(path); true }
+  def write(df: DataFrame): Boolean = { df.write.mode("append").parquet(path); true }
 }
 
 /** Exactly-once parquet sink: each micro-batch lands in its own
@@ -100,13 +80,9 @@ final class IdempotentParquetSink(path: String) extends RecordSink {
       df.sparkSession.sessionState.newHadoopConf())
     if (isCommitted(fs, batchId)) return false // redelivered → no-op
     // Overwrite clears any uncommitted partial attempt.
-    val ran =
-      if (RecordSink.probeEmpty(df)) { fs.mkdirs(batchDir(batchId)); false }
-      else {
-        df.write.mode("overwrite").parquet(batchDir(batchId).toString); true
-      }
+    df.write.mode("overwrite").parquet(batchDir(batchId).toString)
     fs.create(marker(batchId), true).close() // commit point
-    ran
+    true
   }
 }
 
@@ -191,7 +167,7 @@ final class JdbcRowSink(url: String, table: String, batchSize: Int = 25000)
         } finally conn.close()
       }
     }
-    true // foreachPartition is a Dataset action — metrics rode it
+    true
   }
 }
 
@@ -251,7 +227,7 @@ final class IdempotentJdbcSink(url: String, table: String,
         } finally conn.close() // uncommitted work rolls back
       }
     }
-    true // foreachPartition is a Dataset action — metrics rode it
+    true
   }
 }
 

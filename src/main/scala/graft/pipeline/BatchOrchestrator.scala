@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.expr.PipelineConfig
@@ -30,8 +30,7 @@ final class BatchOrchestrator(
     cfg: PipelineConfig,
     validSink: RecordSink,
     dlqSink: RecordSink,
-    onBatchComplete: BatchStats => Unit = BatchStats.logLine,
-    metricWaitMs: Long = BatchOrchestrator.DefaultMetricWaitMs)
+    onBatchComplete: BatchStats => Unit = BatchStats.logLine)
   extends Serializable {
 
   @volatile private var cachedMetas: Option[Seq[ColumnMeta]] = None
@@ -39,10 +38,10 @@ final class BatchOrchestrator(
   @volatile var schemaFetches: Int = 0
   @volatile var insertAttempts: Int = 0
   /** Telemetry of the most recent batch (reference main.py:420, 466:
-    * "Processed {n} packets in {t:.2f} sec"). Counts ride the sink
-    * writes via `Dataset.observe` — collected DURING the existing
-    * action, never a second pass over the batch (`df.count()` here
-    * would re-run decode→validate→coerce for every batch).
+    * "Processed {n} packets in {t:.2f} sec"). Counts come from the
+    * batch pass that materializes the persisted parse
+    * ([[BatchResult.counts]]), which the writes then read from cache:
+    * three Spark jobs per batch, one of which counts.
     */
   @volatile var lastStats: Option[BatchStats] = None
 
@@ -65,101 +64,65 @@ final class BatchOrchestrator(
     // diagnostic envelopes on a redelivered batch are acceptable, as
     // in the reference (a retried batch re-produces to the DLQ topic).
     val res = Pipeline.process(raw, metas(), cfg)
-    val (validObs, validDf) = observed(res.valid)
-    val firstAttempt: Either[Exception, Boolean] =
-      try { insertAttempts += 1; Right(validSink.write(validDf, batchId)) }
-      catch { case e: Exception => Left(e) }
-    firstAttempt match {
-      case Right(wroteValid) =>
-        val (dlqObs, dlqDf) = observed(res.dlq)
-        val wroteDlq = dlqSink.write(dlqDf) // invalid → DLQ (main.py:452-456)
-        res.release()
-        finish(batchId, validObs, wroteValid, dlqObs, wroteDlq,
-          retried = false, t0)
-      case Left(_) =>
-        // Schema drift path: rebuild schema, re-validate the ORIGINAL
-        // payloads (not the already-coerced rows), retry the insert
-        // once (main.py:434-445).
-        val res2 = Pipeline.process(raw, refreshMetas(), cfg)
-        val (validObs2, validDf2) = observed(res2.valid)
-        val wroteValid2 =
-          try { insertAttempts += 1; validSink.write(validDf2, batchId) }
-          catch {
-            case e2: Exception => // still-valid rows → DLQ (main.py:446-450)
-              dlqSink.write(res2.validRaw.withColumn("error", lit(e2.getMessage)))
-              false // the valid write died mid-action; its metrics may never arrive
-          }
-        val (dlqObs2, dlqDf2) = observed(res2.dlq)
-        val wroteDlq2 = dlqSink.write(dlqDf2) // invalid → DLQ (main.py:459-463)
-        res2.release()
-        res.release()
-        finish(batchId, validObs2, wroteValid2, dlqObs2, wroteDlq2,
-          retried = true, t0)
-    }
-  }
-
-  // One Observation per write: the count aggregates map-side inside
-  // the sink's own job (an AggregatingAccumulator on the existing
-  // scan), so telemetry costs zero extra passes.
-  private def observed(df: DataFrame): (Observation, DataFrame) = {
-    val obs = Observation()
-    (obs, df.observe(obs, count(lit(1)).as("rows")))
-  }
-
-  private def finish(
-      batchId: Long,
-      valid: Observation,
-      wroteValid: Boolean,
-      dlq: Observation,
-      wroteDlq: Boolean,
-      retried: Boolean,
-      t0: Long): Unit = {
-    // Metric read keyed on the sink's own report (RecordSink.write's
-    // Boolean): if the sink skipped its action (redelivered idempotent
-    // epoch, empty batch) no job ran, no metrics exist, and the count
-    // is honestly None — never wait for an event that will not come.
-    // When the write DID run, the completed action's metrics travel an
-    // ASYNC listener bus, so a bare non-blocking read here raced it
-    // and silently dropped real counts. The read parks on the
-    // observation's completion FUTURE with a bounded deadline (no
-    // sleep-poll; `Observation.get` alone would block forever on a
-    // lost event) and LOGS a deadline hit, so "listener event lost"
-    // is distinguishable from "sink skipped the write" downstream
-    // (IngestBench treats None-after-write as metric loss, not 0).
-    def n(o: Observation, wrote: Boolean): Option[Long] = {
-      if (!wrote) return None
-      org.apache.spark.sql.graft.bridge.observationAwait(o, metricWaitMs) match {
-        case Some(m) => m.get("rows").map(_.asInstanceOf[Long])
-        case None =>
-          System.err.println(
-            s"[graft] batch $batchId: observation metrics missing after " +
-              s"$metricWaitMs ms — listener event lost (metric loss, the " +
-              "write itself reported success)")
-          None
+    try {
+      val counts = res.counts // outside the drift catch: only the insert may fail over
+      val firstAttempt: Either[Exception, Option[Long]] =
+        try Right(insert(res.valid, counts.valid, batchId))
+        catch { case e: Exception => Left(e) }
+      firstAttempt match {
+        case Right(validRows) =>
+          // invalid → DLQ (main.py:452-456)
+          val dlqRows = written(counts.dlq)(dlqSink.write(res.dlq))
+          finish(batchId, validRows, dlqRows, retried = false, t0)
+        case Left(_) =>
+          // Schema drift path: rebuild schema, re-validate the ORIGINAL
+          // payloads (not the already-coerced rows), retry the insert
+          // once (main.py:434-445).
+          val res2 = Pipeline.process(raw, refreshMetas(), cfg)
+          try {
+            val counts2 = res2.counts
+            val validRows2 =
+              try insert(res2.valid, counts2.valid, batchId)
+              catch {
+                case e2: Exception => // still-valid rows → DLQ (main.py:446-450)
+                  val reason = Option(e2.getMessage).getOrElse(e2.getClass.getName)
+                  dlqSink.write(res2.validRaw.withColumn("error", lit(reason)))
+                  None
+              }
+            // invalid → DLQ (main.py:459-463)
+            val dlqRows2 = written(counts2.dlq)(dlqSink.write(res2.dlq))
+            finish(batchId, validRows2, dlqRows2, retried = true, t0)
+          } finally res2.release()
       }
-    }
-    val stats = BatchStats(batchId, n(valid, wroteValid), n(dlq, wroteDlq),
-      retried, (System.nanoTime() - t0) / 1000000L)
+    } finally res.release()
+  }
+
+  private def insert(valid: DataFrame, rows: Long, batchId: Long): Option[Long] =
+    written(rows) { insertAttempts += 1; validSink.write(valid, batchId) }
+
+  /** One side's write, keyed on the batch pass's count: an empty side
+    * is skipped, matching the reference's empty-batch no-op
+    * (main.py:337-339). The count is `Some` only when the sink reports
+    * that its write ran, so a redelivered idempotent epoch reads None.
+    */
+  private def written(rows: Long)(write: => Boolean): Option[Long] =
+    if (rows > 0 && write) Some(rows) else None
+
+  private def finish(batchId: Long, validRows: Option[Long], dlqRows: Option[Long],
+      retried: Boolean, t0: Long): Unit = {
+    val stats = BatchStats(batchId, validRows, dlqRows, retried,
+      (System.nanoTime() - t0) / 1000000L)
     lastStats = Some(stats)
     onBatchComplete(stats)
   }
 }
 
-object BatchOrchestrator {
-  /** How long `finish` waits for a completed write's observation
-    * metrics to cross the async listener bus before declaring the
-    * event lost. Generous: the bus drains in milliseconds unless the
-    * driver is saturated; a hit is logged, never silent.
-    */
-  val DefaultMetricWaitMs: Long = 10000L
-}
-
 /** Per-batch processing telemetry (the reference's per-batch log:
   * "Processed {n} packets in {t:.2f} sec", main.py:420, 466 — plus
   * the valid/DLQ split and the drift-retry flag it doesn't surface).
-  * A count is None when its sink skipped the write (idempotent
-  * redelivery, or an empty batch the sink elided), distinguishing
-  * "rows rode a write" from "did not write".
+  * A count is None when no write ran (an empty side, or an idempotent
+  * sink's redelivered epoch), distinguishing "rows rode a write" from
+  * "did not write".
   */
 final case class BatchStats(
     batchId: Long,
