@@ -7,10 +7,15 @@
 Exports the base revision with `git archive` into .bench_build/ab/<sha>
 (kept between invocations, so its build is reused), then runs
 `perfbench/run.py` once per seed in each tree, alternating which tree
-goes first. Prints each metric's median per side and the ratio
-working/base. Every run's JSON line goes to --out when given. A run
-that reports `correct: false` is listed and excluded from the medians.
-The benchmark itself is only called, never changed.
+goes first. Prints each metric's median and quartiles per side, the
+ratio working/base, how many seeds' pairs the working tree won (in the
+direction BENCHMARK.json declares), and whether the acceptance rule for
+a claimed gain holds: at least 10 pairs, the working tree wins at
+least 9 in 10 of them, and its median is better than the base median by
+more than the base's interquartile range. Every run's JSON line goes to --out when given. A
+run that reports `correct: false` is listed and excluded from the
+medians, and its seed from the pairs. The benchmark itself is only
+called, never changed.
 """
 
 import argparse
@@ -30,6 +35,20 @@ def seeds(spec):
         lo, _, hi = part.partition("-")
         out += range(int(lo), int(hi or lo) + 1)
     return out
+
+
+def better_is_higher():
+    """metric name → True when BENCHMARK.json declares higher as better."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    return {m["name"]: m["better"] == "higher" for m in bench["end_to_end"] + bench["per_layer"]}
+
+
+def quartiles(xs):
+    """(q1, median, q3); a single run is all three."""
+    if len(xs) < 2:
+        return xs * 3
+    return statistics.quantiles(xs, n=4, method="inclusive")
 
 
 def export(rev):
@@ -67,7 +86,7 @@ def main(argv=None):
 
     sha, base_tree = export(a.base)
     sides = {"base": base_tree, "work": ROOT}
-    results = {"base": [], "work": []}
+    results = {"base": {}, "work": {}}  # side → seed → metrics
     for i, seed in enumerate(seeds(a.seeds)):
         order = ["base", "work"] if i % 2 == 0 else ["work", "base"]
         for side in order:
@@ -79,20 +98,30 @@ def main(argv=None):
                 with open(a.out, "a") as f:
                     f.write(json.dumps(rec) + "\n")
             if res["correct"]:
-                results[side].append(res["metrics"])
+                results[side][seed] = res["metrics"]
             else:
                 print(f"perfbench_ab: {side} seed {seed} reported correct=false; "
                       "excluded", file=sys.stderr)
 
     if not (results["base"] and results["work"]):
         sys.exit("perfbench_ab: a side has no correct run")
-    print(f"{'metric':32} {'base ' + sha:>14} {'working':>14} {'ratio':>8}"
-          f"   (medians; runs {len(results['base'])}/{len(results['work'])})")
-    for m in results["base"][0]:
-        base, work = (statistics.median(r[m]["value"] for r in results[s])
-                      for s in ("base", "work"))
-        ratio = f"{work / base:8.3f}" if base else f"{'-':>8}"
-        print(f"{m:32} {base:>14.6g} {work:>14.6g} {ratio}")
+    higher = better_is_higher()
+    paired = sorted(set(results["base"]) & set(results["work"]))
+    print(f"{'metric':32} {'base ' + sha + ' (q1-q3)':>30} {'working (q1-q3)':>30} {'ratio':>7}"
+          f" {'won':>6}  rule   (runs {len(results['base'])}/{len(results['work'])},"
+          f" pairs {len(paired)})")
+    for m in next(iter(results["base"].values())):
+        (bq1, base, bq3), (wq1, work, wq3) = (
+            quartiles([r[m]["value"] for r in results[s].values()]) for s in ("base", "work"))
+        sign = 1 if higher[m] else -1
+        won = sum(sign * (results["work"][k][m]["value"] - results["base"][k][m]["value"]) > 0
+                  for k in paired)
+        rule = (len(paired) >= 10 and won >= 0.9 * len(paired)
+                and sign * (work - base) > bq3 - bq1)
+        ratio = f"{work / base:7.3f}" if base else f"{'-':>7}"
+        print(f"{m:32} {f'{base:.6g} ({bq1:.6g}-{bq3:.6g})':>30}"
+              f" {f'{work:.6g} ({wq1:.6g}-{wq3:.6g})':>30} {ratio}"
+              f" {f'{won}/{len(paired)}':>6}  {'holds' if rule else 'no'}")
 
 
 if __name__ == "__main__":

@@ -6,6 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.bridge
 
+import graft.streaming.StreamJob
+
 /** The one harness every driver main runs on: the session contract,
   * the inter-query cache hygiene, and a cold timed run.
   *
@@ -21,9 +23,10 @@ object Harness {
 
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** `local[cpus]`, UTC session time zone, UI off, log level WARN.
-    * `extra` confs are set after these defaults, so a tool may
-    * override one of them.
+  /** `local[cpus]`, UTC session time zone, UI off, log level WARN,
+    * and `StreamJob.SessionPolicy`, so that `newSession()` clones and
+    * streaming queries share one codegen cache. `extra` confs are set
+    * after these defaults, so a tool may override one of them.
     */
   def session(extra: (String, String)*): SparkSession = {
     val builder = SparkSession.builder()
@@ -31,7 +34,7 @@ object Harness {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => builder.config(k, v) }
+    (StreamJob.SessionPolicy +: extra).foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

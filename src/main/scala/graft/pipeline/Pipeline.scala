@@ -19,7 +19,13 @@ final case class BatchCounts(present: Set[String], valid: Long, dlq: Long)
   * `row` is the original JSON payload string.
   *
   * Call [[release]] after both sides have been materialized — the split
-  * shares one persisted parse of the input.
+  * shares one persisted parse of the input. That cache holds the
+  * variant, the kind codes and the error of every non-empty row, and
+  * the payload string of the invalid rows only: `valid` reads the
+  * variant, and `dlq` is the one cached reader of the payload.
+  * `validRaw`, the valid rows' original payloads, is not read from the
+  * cache: it re-parses the input. Only the drift path's second failure
+  * reads it, and that path has re-run `process` already.
   */
 final class BatchResult private[pipeline] (
     val valid: DataFrame,
@@ -52,7 +58,8 @@ final class BatchResult private[pipeline] (
   * only driver-side step is the batch pass ([[BatchResult.counts]]):
   * one job that fills the cache and returns the batch presence, which
   * replicates Polars' batch-level column union (main.py:257, 265), and
-  * the two sides' row counts.
+  * the two sides' row counts. [[BatchResult]] says what the cache
+  * holds.
   */
 object Pipeline {
 
@@ -121,8 +128,11 @@ object Pipeline {
       .withColumn(Err,
         when(col(V).isNull, lit("malformed JSON"))
           .otherwise(Validation.errorFromKinds(kinds, metas, cfg)))
+    // Only the DLQ side reads the payload from the cache.
     val parsed =
-      if (share) parsedPlan.persist(StorageLevel.MEMORY_AND_DISK) else parsedPlan
+      if (share) parsedPlan.withColumn(ValueCol, when(col(Err).isNotNull, value))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      else parsedPlan
 
     lazy val counts = batchPass(parsed, kinds, col(Err).isNull, metas)
     val batchPresent: Option[Set[String]] =
@@ -137,8 +147,8 @@ object Pipeline {
       .select(value.as("row"), col(Err).as("error"))
     // Original payloads of the VALID rows — the reference pushes these
     // (not the coerced form) to the DLQ if the post-retry insert still
-    // fails (main.py:446-450).
-    val validRaw = parsed.filter(col(Err).isNull).select(value.as("row"))
+    // fails (main.py:446-450). Not cached: recomputed from the input.
+    val validRaw = parsedPlan.filter(col(Err).isNull).select(value.as("row"))
     new BatchResult(valid, dlq, validRaw, parsed, () => counts)
   }
 }

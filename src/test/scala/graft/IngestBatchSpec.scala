@@ -3,20 +3,24 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions.{col, concat, lit, when}
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.expr.PipelineConfig
-import graft.io.{ParquetDlqSink, ParquetSink, RecordSink}
-import graft.pipeline.{BatchOrchestrator, Pipeline}
+import graft.io.{FileJsonSource, IdempotentParquetSink, ParquetDlqSink, ParquetSink, RecordSink}
+import graft.pipeline.{BatchOrchestrator, BatchStats, Pipeline}
 import graft.schema.SchemaProvider
+import graft.streaming.StreamJob
 
 /** The ingest batch's cost contract: one batch pass plus the two sink
-  * writes, a parse/validate stage the JIT can compile, and no cache or
-  * reason lost on a failing path.
+  * writes, a parse/validate stage the JIT can compile, a new streaming
+  * query that reuses the generated classes of the last one, and no
+  * cache or reason lost on a failing path.
   */
 class IngestBatchSpec extends SparkSpec {
 
@@ -98,6 +102,25 @@ class IngestBatchSpec extends SparkSpec {
           s"a ${stats.maxMethodCodeSize}-byte method is never JIT-compiled:\n$subtree")
       }
     } finally res.release()
+  }
+
+  test("a second streaming query compiles no class on its first trigger") {
+    val topic = s"${tmp()}/topic"
+    payloads(2000, 10).write.text(topic)
+    def drain(onBatch: BatchStats => Unit): Unit = {
+      val out = tmp()
+      val orch = new BatchOrchestrator(provider, cfg, new IdempotentParquetSink(s"$out/sink"),
+        new ParquetDlqSink(s"$out/dlq"), onBatch)
+      StreamJob.start(new FileJsonSource(topic).load(spark), orch, s"$out/checkpoint",
+        Trigger.AvailableNow()).awaitTermination()
+    }
+    // JVM-wide: one count per class compiled.
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    drain(_ => ())
+    val before = compiled
+    @volatile var grew = -1L
+    drain(s => if (s.batchId == 0) grew = compiled - before)
+    assert(grew == 0, s"the second query's first trigger compiled $grew classes")
   }
 
   test("drift path: a sink exception without a message still gives the DLQ row a string reason") {

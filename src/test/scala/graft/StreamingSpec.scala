@@ -298,15 +298,22 @@ class StreamingSpec extends SparkSpec {
   test("second failure: still-valid rows land in DLQ as {row, error} envelopes") {
     val validDir = tmp(); val dlqDir = tmp()
     val alwaysFails = new FlakySink(new ParquetSink(validDir), failures = 99)
+    val valid = Seq(
+      """{"device_id": 5, "note": "doomed"}""",
+      """{"device_id": 6}""",
+      """{"device_id": 7, "event_time": "2024-05-01 10:00:00", "note": " spaced "}""")
     runStream(
-      Seq("""{"device_id": 5, "note": "doomed"}""", "{junk"),
+      valid ++ Seq("""{"note": "missing required"}""", "{junk", " \t "),
       alwaysFails, new ParquetDlqSink(dlqDir))
     assert(!Files.exists(java.nio.file.Paths.get(validDir, "_SUCCESS")))
     val dlq = spark.read.parquet(dlqDir).collect()
-    assert(dlq.length == 2)
-    val doomed = dlq.find(_.getString(0).contains("doomed")).get
-    assert(doomed.getString(1).contains("simulated insert failure"))
-    assert(dlq.exists(_.getString(1) == "malformed JSON"))
+    assert(dlq.length == 5, "3 still-valid + 2 invalid; the blank payload is dropped")
+    // The envelopes carry the original payloads, byte for byte.
+    val doomed = dlq.filter(_.getString(1).contains("simulated insert failure"))
+    assert(doomed.length == 3)
+    assert(doomed.map(_.getString(0)).sorted.toSeq == valid.sorted)
+    assert(dlq.map(_.getString(1)).count(_ == "malformed JSON") == 1)
+    assert(dlq.map(_.getString(1)).count(_ == "data must contain ['device_id'] properties") == 1)
   }
 
   test("idempotent sink: a redelivered batch is a no-op (exactly-once output)") {
