@@ -10,14 +10,8 @@ import graft.expr.{BytesPack, DotProduct, JaroWinkler, MinHashSignature, PcmFram
   * expressions as SQL functions, so they're usable from `spark.sql`
   * and `selectExpr` (and by any SQL-speaking client of a session built
   * with `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`):
-  *
-  *   - `graft_dot_product(array<double>, array<double>) -> double`
-  *   - `graft_minhash(array<string>, numHashes) -> array<bigint>`
-  *   - `graft_jaro_winkler(string, string) -> double`
-  *   - `graft_tokens(string) -> array<string>`
-  *   - `graft_shingle_hashes(string, n) -> array<bigint>` (sorted set)
-  *   - `graft_positional_shingle_hashes(string, n) -> array<bigint>`
+  * `spark.sql.extensions=graft.GraftExtensions`). The functions and
+  * their signatures are listed in [[GraftExtensions.functions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -34,136 +28,58 @@ object GraftExtensions {
   type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
+  /** One SQL function per native expression. Each call checks its
+    * arity and integer-literal arguments and fails with the signature.
+    */
   val functions: Seq[FunctionDescription] = Seq(
-    (
-      new FunctionIdentifier("graft_dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot_product"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_dot_product takes (array<double>, array<double>)")
-        DotProduct(children(0), children(1))
-      }),
-    (
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_minhash takes (array<string>, numHashes)")
-        val n = children(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash numHashes must be an integer literal, got $other")
-        }
-        MinHashSignature(children(0), n)
-      }),
-    (
-      new FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_jaro_winkler takes (string, string)")
-        JaroWinkler(children(0), children(1))
-      }),
-    (
-      new FunctionIdentifier("graft_tokens"),
-      new ExpressionInfo(classOf[Tokens].getName, "graft_tokens"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_tokens takes (string)")
-        Tokens(children(0))
-      }),
-    (
-      new FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_shingle_hashes takes (string, n)")
-        ShingleHashes(children(0), intLit(children(1), "graft_shingle_hashes n"))
-      }),
-    (
-      new FunctionIdentifier("graft_pretokens"),
-      new ExpressionInfo(classOf[Pretokens].getName, "graft_pretokens"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_pretokens takes (string)")
-        Pretokens(children(0))
-      }),
-    (
-      new FunctionIdentifier("graft_positional_shingle_hashes"),
-      new ExpressionInfo(classOf[PositionalShingleHashes].getName,
-        "graft_positional_shingle_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_positional_shingle_hashes takes (string, n)")
-        PositionalShingleHashes(children(0),
-          intLit(children(1), "graft_positional_shingle_hashes n"))
-      }),
-    (
-      new FunctionIdentifier("graft_sorted_intersect"),
-      new ExpressionInfo(classOf[SortedIntersect].getName, "graft_sorted_intersect"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_sorted_intersect takes (array<bigint>, array<bigint>)")
-        SortedIntersect(children(0), children(1))
-      }),
-    (
-      new FunctionIdentifier("graft_pcm_pack"),
-      new ExpressionInfo(classOf[PcmPack].getName, "graft_pcm_pack"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_pcm_pack takes (array<bigint>)")
-        PcmPack(children(0))
-      }),
-    (
-      new FunctionIdentifier("graft_pcm_frame_rms"),
-      new ExpressionInfo(classOf[PcmFrameRms].getName, "graft_pcm_frame_rms"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_pcm_frame_rms takes (binary, frameSize)")
-        PcmFrameRms(children(0), intLit(children(1), "graft_pcm_frame_rms frameSize"))
-      }),
-    (
-      new FunctionIdentifier("graft_bytes_pack"),
-      new ExpressionInfo(classOf[BytesPack].getName, "graft_bytes_pack"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_bytes_pack takes (array<bigint>)")
-        BytesPack(children(0))
-      }),
-    (
-      new FunctionIdentifier("graft_rgb_luma_hist"),
-      new ExpressionInfo(classOf[RgbLumaHist].getName, "graft_rgb_luma_hist"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_rgb_luma_hist takes (binary, bins)")
-        RgbLumaHist(children(0), intLit(children(1), "graft_rgb_luma_hist bins"))
-      }),
-    (
-      new FunctionIdentifier("graft_rgb_luma_sum"),
-      new ExpressionInfo(classOf[RgbLumaSum].getName, "graft_rgb_luma_sum"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_rgb_luma_sum takes (binary)")
-        RgbLumaSum(children(0))
-      }),
-    (
-      new FunctionIdentifier("graft_rgb_resize"),
-      new ExpressionInfo(classOf[RgbResizeNearest].getName, "graft_rgb_resize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 5,
-          "graft_rgb_resize takes (binary, w1, h1, w2, h2)")
-        RgbResizeNearest(children(0),
-          intLit(children(1), "graft_rgb_resize w1"),
-          intLit(children(2), "graft_rgb_resize h1"),
-          intLit(children(3), "graft_rgb_resize w2"),
-          intLit(children(4), "graft_rgb_resize h2"))
-      }),
-    (
-      new FunctionIdentifier("graft_rgb_motion"),
-      new ExpressionInfo(classOf[RgbMotion].getName, "graft_rgb_motion"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_rgb_motion takes (binary, frameBytes)")
-        RgbMotion(children(0), intLit(children(1), "graft_rgb_motion frameBytes"))
-      }))
+    fn("graft_dot_product", classOf[DotProduct], "array<double>", "array<double>")(
+      a => DotProduct(a(0), a(1))),
+    fn("graft_minhash", classOf[MinHashSignature], "array<string>", "numHashes")(
+      a => MinHashSignature(a(0), a.int(1))),
+    fn("graft_jaro_winkler", classOf[JaroWinkler], "string", "string")(
+      a => JaroWinkler(a(0), a(1))),
+    fn("graft_tokens", classOf[Tokens], "string")(a => Tokens(a(0))),
+    // sorted set of shingle hashes
+    fn("graft_shingle_hashes", classOf[ShingleHashes], "string", "n")(
+      a => ShingleHashes(a(0), a.int(1))),
+    fn("graft_pretokens", classOf[Pretokens], "string")(a => Pretokens(a(0))),
+    fn("graft_positional_shingle_hashes", classOf[PositionalShingleHashes], "string", "n")(
+      a => PositionalShingleHashes(a(0), a.int(1))),
+    fn("graft_sorted_intersect", classOf[SortedIntersect], "array<bigint>", "array<bigint>")(
+      a => SortedIntersect(a(0), a(1))),
+    fn("graft_pcm_pack", classOf[PcmPack], "array<bigint>")(a => PcmPack(a(0))),
+    fn("graft_pcm_frame_rms", classOf[PcmFrameRms], "binary", "frameSize")(
+      a => PcmFrameRms(a(0), a.int(1))),
+    fn("graft_bytes_pack", classOf[BytesPack], "array<bigint>")(a => BytesPack(a(0))),
+    fn("graft_rgb_luma_hist", classOf[RgbLumaHist], "binary", "bins")(
+      a => RgbLumaHist(a(0), a.int(1))),
+    fn("graft_rgb_luma_sum", classOf[RgbLumaSum], "binary")(a => RgbLumaSum(a(0))),
+    fn("graft_rgb_resize", classOf[RgbResizeNearest], "binary", "w1", "h1", "w2", "h2")(
+      a => RgbResizeNearest(a(0), a.int(1), a.int(2), a.int(3), a.int(4))),
+    fn("graft_rgb_motion", classOf[RgbMotion], "binary", "frameBytes")(
+      a => RgbMotion(a(0), a.int(1))))
 
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
+  /** A call's arguments; [[int]] reads an integer-literal one. */
+  private final class Args(
+      name: String, params: Seq[String], children: Seq[Expression]) {
+    def apply(i: Int): Expression = children(i)
+    def int(i: Int): Int = children(i) match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$name ${params(i)} must be an integer literal, got $other")
+    }
   }
+
+  /** Registers `name` for `cls`; a call must pass one argument per
+    * entry of `params`, else it fails with "`name` takes (`params`)".
+    */
+  private def fn(name: String, cls: Class[_ <: Expression], params: String*)(
+      build: Args => Expression): FunctionDescription =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => {
+        require(children.length == params.length, params.mkString(s"$name takes (", ", ", ")"))
+        build(new Args(name, params, children))
+      })
 
   /** Register on an already-built session (tests, shells). Sessions
     * built with `spark.sql.extensions=graft.GraftExtensions` get this

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.expr.PipelineConfig
 import graft.io.{IdempotentParquetSink, ParquetDlqSink}
 import graft.pipeline.{BatchOrchestrator, Pipeline}
 import graft.schema.SchemaProvider
@@ -74,13 +73,8 @@ object IngestBench {
     val nBatches = spark.read.parquet(topicDir)
       .select(max(col("batch").cast("long"))).collect()(0).getLong(0) + 1
 
-    val provider = SchemaProvider.fixed(
-      events.schema.fields.toSeq.map(f =>
-        graft.types.CHType.columnMeta(f.name, graft.types.CHType.fromSpark(f.dataType))))
-    val cfg = PipelineConfig(
-      required = Seq("event_id", "ts"),
-      datetimeCols = Set("ts"),
-      stringEnumCols = Set.empty)
+    val provider = SchemaProvider.fixed(sources.Tables.eventsMetas(events))
+    val cfg = sources.Tables.eventsIngestCfg
 
     // Hoisted ONCE: re-creating the relation per poll re-ran driver-side
     // file listing + footer schema inference for every micro-batch — a

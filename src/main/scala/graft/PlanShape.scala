@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -17,7 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (the exact regression ScaleRehearsal gates) never appear in it.
   * Both are fixed here: node classes are matched exactly, and the
   * count recurses through AdaptiveSparkPlanExec.executedPlan /
-  * QueryStageExec.plan (PlanAudit's recursion), so callers that
+  * QueryStageExec.plan (PlanAudit reads the same walk), so callers that
   * EXECUTE the frame first read the AQE FINAL plan.
   */
 object PlanShape {
@@ -33,7 +35,7 @@ object PlanShape {
     * non-child field) and skipping ReusedExchange subtrees (the reused
     * exchange was already counted where it was planned).
     */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] =
+  private[graft] def nodes(p: SparkPlan): Seq[SparkPlan] =
     p.collect { case x => x }.flatMap {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
@@ -69,22 +71,25 @@ object PlanShape {
     * micro-batch plan shape plus the state-store totals — FINAL rows
     * (what watermark eviction leaves behind: the end-state claim) and
     * PEAK rows across every reported micro-batch (the in-flight bound:
-    * what an executor must actually hold while the stream runs).
+    * what an executor must actually hold while the stream runs) — and
+    * each reported micro-batch's `durationMs` phases (addBatch vs
+    * WAL/offset commits vs planning), oldest first.
     */
   final case class StreamRunInfo(
       shape: Map[String, Int], stateRows: Long, statePeakRows: Long,
-      stateBytes: Long)
+      stateBytes: Long, batchDurationsMs: Seq[Map[String, Long]] = Nil)
 
   private val streamTelemetry =
     new java.util.concurrent.ConcurrentHashMap[String, StreamRunInfo]()
 
-  /** Record shape + state metrics of a TERMINATED streaming query
-    * under `tag` (queried later via [[lastStreamRun]]). The micro-batch
-    * plan comes from the StreamExecution's lastExecution (the
-    * IncrementalExecution that really ran, AQE-final by construction —
-    * streaming disables AQE for stateful plans); state totals from the
-    * newest progress that carries stateOperators (AvailableNow's
-    * closing no-data batch reports them too; -1 = stateless query).
+  /** Record shape, state metrics and per-batch durations of a
+    * TERMINATED streaming query under `tag` (queried later via
+    * [[lastStreamRun]]). The micro-batch plan comes from the
+    * StreamExecution's lastExecution (the IncrementalExecution that
+    * really ran, AQE-final by construction — streaming disables AQE
+    * for stateful plans); state totals from the newest progress that
+    * carries stateOperators (AvailableNow's closing no-data batch
+    * reports them too; -1 = stateless query).
     */
   def captureStream(tag: String, q: StreamingQuery): Unit = try {
     val exec = q match {
@@ -94,16 +99,18 @@ object PlanShape {
     }
     val shape =
       if (exec == null) Map.empty[String, Int] else counts(exec.executedPlan)
-    val sos = q.recentProgress.reverse
+    val progress = q.recentProgress.toSeq
+    val sos = progress.reverse
       .collectFirst { case p if p.stateOperators.nonEmpty => p.stateOperators }
-    val perBatch = q.recentProgress.toSeq
+    val perBatch = progress
       .filter(_.stateOperators.nonEmpty)
       .map(_.stateOperators.map(_.numRowsTotal).sum)
     streamTelemetry.put(tag, StreamRunInfo(
       shape,
       sos.map(_.map(_.numRowsTotal).sum).getOrElse(-1L),
       if (perBatch.nonEmpty) perBatch.max else -1L,
-      sos.map(_.map(_.memoryUsedBytes).sum).getOrElse(-1L)))
+      sos.map(_.map(_.memoryUsedBytes).sum).getOrElse(-1L),
+      progress.map(_.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap)))
   } catch { case scala.util.control.NonFatal(_) => () }
 
   def lastStreamRun(tag: String): Option[StreamRunInfo] =

@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expr.PipelineConfig
 import graft.pipeline.Pipeline
-import graft.schema.SchemaProvider
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -29,14 +27,8 @@ object SparkEntry {
         org.apache.spark.sql.Row("{malformed"),
         org.apache.spark.sql.Row("   ")),
       asJson.schema)
-    val provider = SchemaProvider.fixed(
-      events.schema.fields.toSeq.map(f =>
-        graft.types.CHType.columnMeta(f.name, graft.types.CHType.fromSpark(f.dataType))))
-    val cfg = PipelineConfig(
-      required = Seq("event_id", "ts"),
-      datetimeCols = Set("ts"),
-      stringEnumCols = Set.empty)
-    Pipeline.process(asJson.union(dirty), provider.resolveFiltered(), cfg).valid
+    Pipeline.process(asJson.union(dirty), sources.Tables.eventsMetas(events),
+      sources.Tables.eventsIngestCfg).valid
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

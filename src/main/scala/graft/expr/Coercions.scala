@@ -11,26 +11,22 @@ import graft.types.{CHType, ColumnMeta}
   * case-insensitive for the datetime/string-enum sets, mirroring
   * `col.lower() in datetime_cols` (main.py:267, 275).
   *
+  * The reference's *batch-level* missing-column behavior (a column
+  * absent from every row of the batch takes the typed sentinel default,
+  * main.py:296-298) is always replicated; whether a batch needs it is
+  * read from the schema ([[Coercions.needsBatchPresence]]), not set.
+  *
   * @param required        REQUIRED_COLUMNS (main.py:167, 555) — presence
   *                        (key-exists) is validated, not non-nullness
   * @param datetimeCols    DATETIME_COLUMNS (main.py:267) — parsed via the
   *                        permissive datetime branch
   * @param stringEnumCols  STRING_ENUM_COLUMNS (main.py:557, default
   *                        "gps_validity,incognito_mode") — enum-as-name
-  * @param compatBatchPresence replicate the reference's *batch-level*
-  *                        missing-column behavior (a column absent from
-  *                        every row of the batch takes the typed sentinel
-  *                        default, main.py:296-298 — including the quirk
-  *                        that a batch-absent string-enum column yields
-  *                        the Int16 code 127 instead of "DEFAULT",
-  *                        SURVEY §2.3 note 2). When false, string-enum
-  *                        columns are always StringType.
   */
 final case class PipelineConfig(
     required: Seq[String] = Nil,
     datetimeCols: Set[String] = Set.empty,
-    stringEnumCols: Set[String] = Set("gps_validity", "incognito_mode"),
-    compatBatchPresence: Boolean = true) {
+    stringEnumCols: Set[String] = Set("gps_validity", "incognito_mode")) {
   val datetimeLower: Set[String] = datetimeCols.map(_.toLowerCase)
   val stringEnumLower: Set[String] = stringEnumCols.map(_.toLowerCase)
 }
@@ -151,18 +147,32 @@ object Coercions {
   /** Missing-column branch (main.py:296-298): the key is absent from the
     * whole batch → typed sentinel default. Note this uses the *meta*
     * type, so a batch-absent string-enum column gets `lit(127)` as
-    * Int16, not "DEFAULT" — the reference inconsistency we replicate
-    * only in compat mode.
+    * Int16, not "DEFAULT" — the reference inconsistency we replicate.
     */
   def missingExpr(m: ColumnMeta): Column =
     lit(m.default).cast(m.dataType).alias(m.name)
+
+  /** Whether a batch-absent `m` coerces differently from the per-row
+    * branch [[selectList]] would pick for it (same branch order). A
+    * generic column's per-row fill is [[missingExpr]] itself, and a
+    * datetime column with a Timestamp sink lands on the same epoch
+    * literal; a string-enum column (Int16 `127` vs "DEFAULT") and a
+    * datetime column with any other sink type (epoch cast to the meta
+    * type) do not. Only these need the batch pass before coercion.
+    */
+  def needsBatchPresence(m: ColumnMeta, cfg: PipelineConfig): Boolean = {
+    val lower = m.name.toLowerCase
+    if (cfg.datetimeLower.contains(lower)) m.dataType != TimestampType
+    else cfg.stringEnumLower.contains(lower)
+  }
 
   /** The full select-list for one batch: one expression per sink column,
     * in schema order (defines output order, main.py:302). `kinds` holds
     * each column's kind code, aligned with `metas`. `batchPresent`
     * is the set of keys that appear in ≥1 row of the batch (the Polars
     * `source_df.columns` analogue, main.py:265); pass `None` to treat
-    * every column as present (per-row semantics only).
+    * every column as present (per-row semantics only), which gives the
+    * same output wherever no column [[needsBatchPresence]].
     */
   def selectList(
       v: Column,
@@ -172,8 +182,7 @@ object Coercions {
       batchPresent: Option[Set[String]]): Seq[Column] =
     metas.zip(kinds).map { case (m, kind) =>
       val lower = m.name.toLowerCase
-      val inBatch = batchPresent.forall(_.contains(m.name))
-      if (cfg.compatBatchPresence && !inBatch) missingExpr(m)
+      if (!batchPresent.forall(_.contains(m.name))) missingExpr(m)
       else if (cfg.datetimeLower.contains(lower)) datetimeExpr(v, m)
       else if (cfg.stringEnumLower.contains(lower)) stringEnumExpr(v, kind, m)
       else genericExpr(v, kind, m)

@@ -21,9 +21,11 @@ import graft.types.ColumnMeta
   *      `{row: original payload, error}` envelopes (main.py:446-450);
   *   5. invalid rows go to the DLQ on every path (main.py:452-463).
   *
-  * This is the body the streaming job hands to `foreachBatch`; it is
-  * batch-scoped and deterministic — the only cross-batch state is the
-  * cached schema, exactly like the reference (SURVEY §2.5).
+  * Steps 2-5 are one attempt body, run a second time only for the
+  * drift retry. This is the body the streaming job hands to
+  * `foreachBatch`; it is batch-scoped and deterministic — the only
+  * cross-batch state is the cached schema, exactly like the reference
+  * (SURVEY §2.5).
   */
 final class BatchOrchestrator(
     provider: SchemaProvider,
@@ -57,42 +59,38 @@ final class BatchOrchestrator(
     metas()
   }
 
-  def processBatch(raw: DataFrame, batchId: Long): Unit = {
-    val t0 = System.nanoTime()
+  def processBatch(raw: DataFrame, batchId: Long): Unit =
+    attempt(raw, batchId, metas(), retried = false, System.nanoTime())
+
+  /** One validate → insert → DLQ pass over the ORIGINAL payloads `raw`
+    * against `metas`. A failing first insert re-runs this body once
+    * against a re-resolved schema (main.py:434-445) while this
+    * attempt's parse stays cached; a failing retry sends the
+    * still-valid rows to the DLQ (main.py:446-450). Invalid rows go to
+    * the DLQ on the path that finishes (main.py:452-463).
+    */
+  private def attempt(raw: DataFrame, batchId: Long, metas: Seq[ColumnMeta],
+      retried: Boolean, t0: Long): Unit = {
     // The valid-row path is epoch-keyed (exactly-once under an
     // idempotent sink); DLQ writes stay at-least-once — duplicate
     // diagnostic envelopes on a redelivered batch are acceptable, as
     // in the reference (a retried batch re-produces to the DLQ topic).
-    val res = Pipeline.process(raw, metas(), cfg)
+    val res = Pipeline.process(raw, metas, cfg)
     try {
       val counts = res.counts // outside the drift catch: only the insert may fail over
-      val firstAttempt: Either[Exception, Option[Long]] =
+      val inserted: Either[Exception, Option[Long]] =
         try Right(insert(res.valid, counts.valid, batchId))
         catch { case e: Exception => Left(e) }
-      firstAttempt match {
-        case Right(validRows) =>
-          // invalid → DLQ (main.py:452-456)
+      inserted match {
+        case Left(_) if !retried => attempt(raw, batchId, refreshMetas(), retried = true, t0)
+        case _ =>
+          val validRows = inserted.fold({ e =>
+            val reason = Option(e.getMessage).getOrElse(e.getClass.getName)
+            dlqSink.write(res.validRaw.withColumn("error", lit(reason)))
+            None
+          }, identity)
           val dlqRows = written(counts.dlq)(dlqSink.write(res.dlq))
-          finish(batchId, validRows, dlqRows, retried = false, t0)
-        case Left(_) =>
-          // Schema drift path: rebuild schema, re-validate the ORIGINAL
-          // payloads (not the already-coerced rows), retry the insert
-          // once (main.py:434-445).
-          val res2 = Pipeline.process(raw, refreshMetas(), cfg)
-          try {
-            val counts2 = res2.counts
-            val validRows2 =
-              try insert(res2.valid, counts2.valid, batchId)
-              catch {
-                case e2: Exception => // still-valid rows → DLQ (main.py:446-450)
-                  val reason = Option(e2.getMessage).getOrElse(e2.getClass.getName)
-                  dlqSink.write(res2.validRaw.withColumn("error", lit(reason)))
-                  None
-              }
-            // invalid → DLQ (main.py:459-463)
-            val dlqRows2 = written(counts2.dlq)(dlqSink.write(res2.dlq))
-            finish(batchId, validRows2, dlqRows2, retried = true, t0)
-          } finally res2.release()
+          finish(batchId, validRows, dlqRows, retried, t0)
       }
     } finally res.release()
   }

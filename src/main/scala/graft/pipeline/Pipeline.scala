@@ -35,7 +35,7 @@ final class BatchResult private[pipeline] (
     pass: () => BatchCounts) {
   /** The batch pass: one Spark job that materializes the persisted
     * parse and counts both sides. Runs at most once; `process` has
-    * already run it when the batch-presence replication needs it.
+    * already run it when a column needs batch presence.
     */
   lazy val counts: BatchCounts = pass()
   def release(): Unit = parsed.unpersist()
@@ -58,8 +58,10 @@ final class BatchResult private[pipeline] (
   * only driver-side step is the batch pass ([[BatchResult.counts]]):
   * one job that fills the cache and returns the batch presence, which
   * replicates Polars' batch-level column union (main.py:257, 265), and
-  * the two sides' row counts. [[BatchResult]] says what the cache
-  * holds.
+  * the two sides' row counts. Coercion waits for it only when the
+  * schema has a column whose batch absence changes its output
+  * ([[Coercions.needsBatchPresence]]). [[BatchResult]] says what the
+  * cache holds.
   */
 object Pipeline {
 
@@ -102,19 +104,14 @@ object Pipeline {
   }
 
   /** Process one batch of raw JSON payloads (column [[ValueCol]]).
-    *
-    * @param share persist the parsed batch so the batch pass and the
-    *              valid/DLQ sides reuse one parse (the
-    *              streaming/orchestrator shape — call `release()` when
-    *              both sides are materialized). Pass false for
-    *              single-consumer batch use, where the cache would
-    *              never be reused and never be freed.
+    * The parse is persisted so the batch pass and the valid/DLQ sides
+    * share it (an optimizer barrier as well: the error expression is
+    * not inlined into the filters below it); call `release()` when
+    * both sides are materialized. The batch pass runs here only when
+    * some column [[Coercions.needsBatchPresence]]; otherwise it waits
+    * for the first read of [[BatchResult.counts]].
     */
-  def process(
-      raw: DataFrame,
-      metas: Seq[ColumnMeta],
-      cfg: PipelineConfig,
-      share: Boolean = true): BatchResult = {
+  def process(raw: DataFrame, metas: Seq[ColumnMeta], cfg: PipelineConfig): BatchResult = {
     val value = col(ValueCol).cast("string")
     // Python str.strip() strips all ASCII whitespace; Spark's 1-arg trim
     // strips spaces only — pass the trim set explicitly (main.py:519).
@@ -129,14 +126,12 @@ object Pipeline {
         when(col(V).isNull, lit("malformed JSON"))
           .otherwise(Validation.errorFromKinds(kinds, metas, cfg)))
     // Only the DLQ side reads the payload from the cache.
-    val parsed =
-      if (share) parsedPlan.withColumn(ValueCol, when(col(Err).isNotNull, value))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      else parsedPlan
+    val parsed = parsedPlan.withColumn(ValueCol, when(col(Err).isNotNull, value))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     lazy val counts = batchPass(parsed, kinds, col(Err).isNull, metas)
     val batchPresent: Option[Set[String]] =
-      if (cfg.compatBatchPresence) Some(counts.present) else None
+      if (metas.exists(Coercions.needsBatchPresence(_, cfg))) Some(counts.present) else None
 
     val coercions: Seq[Column] =
       Coercions.selectList(col(V), kinds, metas, cfg, batchPresent)

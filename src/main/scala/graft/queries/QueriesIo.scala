@@ -25,9 +25,7 @@ private[graft] trait QueriesIo { this: Queries.type =>
     * throughput-comparable analogue of the reference's 25k-msg batches.
     */
   def q35_ingest_pipeline(s: SparkSession, dir: String): DataFrame = {
-    import graft.expr.PipelineConfig
     import graft.pipeline.Pipeline
-    import graft.types.CHType
     val events = Tables.events(s, dir)
     // The test parquet is one row group → a 1-partition scan; without
     // this the whole decode→validate→coerce pipeline runs on ONE core
@@ -48,20 +46,7 @@ private[graft] trait QueriesIo { this: Queries.type =>
           java.util.Map.of("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
         .as(Pipeline.ValueCol))
       .persistTracked()
-    val metas = events.schema.fields.toSeq.map(f =>
-      CHType.columnMeta(f.name, CHType.fromSpark(f.dataType)))
-    val cfg = PipelineConfig(
-      required = Seq("event_id", "ts"),
-      datetimeCols = Set("ts"),
-      stringEnumCols = Set.empty,
-      // per-row semantics; skips the batch-presence driver collect
-      compatBatchPresence = false)
-    // share=true is load-bearing: the persisted parse is an optimizer
-    // barrier. Without it, PushDownPredicate inlines the (30-reference)
-    // error expression into the Filter below the parse projection and
-    // FilterExec re-evaluates to_json+parse_json per reference — 10×
-    // slower, measured. This is also the orchestrator's real shape.
-    Pipeline.process(asJson, metas, cfg, share = true).valid
+    Pipeline.process(asJson, Tables.eventsMetas(events), Tables.eventsIngestCfg).valid
       .orderBy("event_id")
   }
 

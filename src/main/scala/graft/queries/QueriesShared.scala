@@ -431,24 +431,11 @@ private[graft] trait QueriesShared { this: Queries.type =>
     }
     q.awaitTermination()
     // Scale telemetry for ScaleRehearsal's streaming drains: the
-    // micro-batch plan shape + final state-store totals, keyed by tag.
+    // micro-batch plan shape, final state-store totals and per-batch
+    // durations, keyed by tag.
     PlanShape.captureStream(tag, q)
-    streamDebug(tag, q)
     s.read.parquet(outDir)
   }
-
-  /** Opt-in (SPARK_GRAFT_STREAM_DEBUG=1) per-batch duration telemetry
-    * for the streaming drains — where a drain's wall time actually
-    * goes (addBatch vs WAL/offset commits vs planning), the r14
-    * fixed-cost profiling tool.
-    */
-  private[graft] def streamDebug(tag: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream:$tag] batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-      }
 
   private[graft] def recursiveRollupSql(tbl: String): String =
     s"""WITH RECURSIVE chain AS (

@@ -723,7 +723,6 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
     }
     q.awaitTermination()
     PlanShape.captureStream("sjw", q)
-    streamDebug("sjw", q)
     s.table(table).orderBy("day", "campaign")
   }
 

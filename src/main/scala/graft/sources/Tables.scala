@@ -3,6 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.expr.PipelineConfig
+import graft.types.{CHType, ColumnMeta}
+
 /** Test-table readers. The only special case is `events`, whose `ts`
   * column has shipped in two encodings across driver testdata
   * generations: parquet TIMESTAMP(NANOS) — a type Spark's vectorized
@@ -39,4 +42,20 @@ object Tables {
         raw.withColumn("ts", col("ts").cast("timestamp"))
     }
   }
+
+  /** The ingest fixture over [[events]] shared by the flagship
+    * (`SparkEntry.entry`), `IngestBench` and q35: one sink column per
+    * events column, its ClickHouse type read back from the Spark type.
+    */
+  def eventsMetas(events: DataFrame): Seq[ColumnMeta] =
+    events.schema.fields.toSeq.map(f => CHType.columnMeta(f.name, CHType.fromSpark(f.dataType)))
+
+  /** The config those three validate and coerce [[eventsMetas]] with.
+    * `ts` has a Timestamp sink and there is no string-enum column, so
+    * no column needs batch presence.
+    */
+  val eventsIngestCfg: PipelineConfig = PipelineConfig(
+    required = Seq("event_id", "ts"),
+    datetimeCols = Set("ts"),
+    stringEnumCols = Set.empty)
 }

@@ -113,4 +113,37 @@ class BucketingSpec extends SparkSpec {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw
   }
+
+  test("every GraftExtensions function rejects a wrong arity with its signature") {
+    GraftExtensions.register(spark)
+    val signatures = Map(
+      "graft_dot_product" -> "(array<double>, array<double>)",
+      "graft_minhash" -> "(array<string>, numHashes)",
+      "graft_jaro_winkler" -> "(string, string)",
+      "graft_tokens" -> "(string)",
+      "graft_shingle_hashes" -> "(string, n)",
+      "graft_pretokens" -> "(string)",
+      "graft_positional_shingle_hashes" -> "(string, n)",
+      "graft_sorted_intersect" -> "(array<bigint>, array<bigint>)",
+      "graft_pcm_pack" -> "(array<bigint>)",
+      "graft_pcm_frame_rms" -> "(binary, frameSize)",
+      "graft_bytes_pack" -> "(array<bigint>)",
+      "graft_rgb_luma_hist" -> "(binary, bins)",
+      "graft_rgb_luma_sum" -> "(binary)",
+      "graft_rgb_resize" -> "(binary, w1, h1, w2, h2)",
+      "graft_rgb_motion" -> "(binary, frameBytes)")
+    assert(GraftExtensions.functions.map(_._1.funcName).toSet == signatures.keySet)
+    def messages(sql: String): Seq[String] = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).toSeq
+    }
+    signatures.foreach { case (name, sig) =>
+      val arity = sig.count(_ == ',') + 1
+      val msgs = messages(s"SELECT $name(${Seq.fill(arity + 1)("1").mkString(", ")})")
+      assert(msgs.exists(_.contains(s"$name takes $sig")), s"$name: $msgs")
+    }
+    assert(messages("SELECT graft_minhash(array('a'), CAST(4 AS BIGINT))")
+      .exists(_.contains("graft_minhash numHashes must be an integer literal")))
+  }
 }

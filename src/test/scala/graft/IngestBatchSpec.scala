@@ -88,6 +88,24 @@ class IngestBatchSpec extends SparkSpec {
     assert(validOnly.lastStats.get.dlqRows.isEmpty)
   }
 
+  test("Pipeline.process runs the batch pass up front only when a column needs batch presence") {
+    def jobsInProcess(metas: Seq[graft.types.ColumnMeta], c: PipelineConfig): Int = {
+      var res: graft.pipeline.BatchResult = null
+      val n = jobsDuring { res = Pipeline.process(payloads(2000, 10), metas, c) }
+      res.release()
+      n
+    }
+    // Generic columns and a Timestamp-sink datetime column coerce a
+    // batch-absent key like a per-row missing one: no job before the write.
+    val perRow = SchemaProvider.fromDescribeRows(Seq(
+      "device_id" -> "UInt32", "trip_id" -> "UUID", "speed_kmh" -> "Float32",
+      "note" -> "String", "event_time" -> "DateTime")).resolveFiltered()
+    assert(jobsInProcess(perRow, PipelineConfig(required = Seq("device_id"),
+      datetimeCols = Set("event_time"), stringEnumCols = Set.empty)) == 0)
+    // The telemetry schema's string-enum and Date datetime columns do.
+    assert(jobsInProcess(provider.resolveFiltered(), cfg) == 1)
+  }
+
   test("every generated method of the parse/validate stage fits HotSpot's 8,000-byte JIT limit") {
     val res = Pipeline.process(payloads(100, 10), provider.resolveFiltered(), cfg)
     try {

@@ -3,9 +3,12 @@ package graft
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.expr.PipelineConfig
+import org.apache.spark.sql.functions.{col, try_parse_json}
+
+import graft.expr.{Coercions, PipelineConfig}
 import graft.pipeline.Pipeline
 import graft.schema.SchemaProvider
+import graft.types.CHType
 
 /** Property suite (SURVEY §5.2.3): pipeline invariants that must hold
   * for ANY input shape — arbitrary JSON values in every field, missing
@@ -95,6 +98,45 @@ class PipelinePropertySpec extends SparkSpec {
       val a = run(payloads)
       val b = run(scala.util.Random.shuffle(payloads))
       assert(a == b)
+    }
+  }
+
+  test("a column that needs no batch presence coerces a batch-absent key like the per-row branch") {
+    val chTypes = Seq("Int8", "Int16", "Int32", "Int64", "UInt8", "UInt16", "UInt32",
+      "UInt64", "Float32", "Float64", "Date", "DateTime", "String", "UUID",
+      "LowCardinality(String)", "Nullable(Int64)", "Enum8('a'=1,'b'=2)")
+    val memberships: Seq[(String, String => PipelineConfig)] = Seq(
+      "generic" -> (_ => PipelineConfig(stringEnumCols = Set.empty)),
+      "datetime" -> (n => PipelineConfig(datetimeCols = Set(n.toUpperCase), stringEnumCols = Set.empty)),
+      "string-enum" -> (n => PipelineConfig(stringEnumCols = Set(n.toUpperCase))))
+    val cases = for {
+      (t, i) <- chTypes.zipWithIndex
+      (kind, cfgOf) <- memberships
+    } yield {
+      val name = s"c_${kind.head}_$i"
+      (s"$t as $kind", CHType.columnMeta(name, t), cfgOf(name))
+    }
+    // Both answers occur, so the property below is not vacuous.
+    assert(cases.exists { case (_, m, c) => Coercions.needsBatchPresence(m, c) })
+    val free = cases.filterNot { case (_, m, c) => Coercions.needsBatchPresence(m, c) }
+    assert(free.map(_._1).toSet ==
+      chTypes.map(t => s"$t as generic").toSet + "DateTime as datetime")
+
+    // None of the columns' keys appears in any row.
+    val v = col("v")
+    val df = Seq("""{"other": 1}""", "{}", """{"x": "2024-01-01", "y": null}""")
+      .toDF("value").select(try_parse_json(col("value")).as("v"))
+    def one(m: graft.types.ColumnMeta, cfg: PipelineConfig, present: Option[Set[String]]) =
+      Coercions.selectList(v, Seq(m), cfg, present).head
+    val absent = free.map { case (_, m, c) => one(m, c, Some(Set.empty)) }
+    val perRow = free.map { case (_, m, c) => one(m, c, None) }
+    val out = df.select(absent.zipWithIndex.map { case (e, i) => e.as(s"a$i") } ++
+      perRow.zipWithIndex.map { case (e, i) => e.as(s"r$i") }: _*)
+    val rows = out.collect()
+    free.indices.foreach { i =>
+      val what = free(i)._1
+      assert(out.schema(s"a$i").dataType == out.schema(s"r$i").dataType, what)
+      rows.foreach(r => assert(r.get(i) == r.get(free.size + i), what))
     }
   }
 }

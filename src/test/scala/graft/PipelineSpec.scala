@@ -298,13 +298,15 @@ class PipelineSpec extends SparkSpec {
       required = Seq("Device_ID"),
       datetimeCols = Set("EVENT_TIME"), // different case than the schema
       stringEnumCols = Set("mode"))
-    // Mode key intentionally absent: a present JSON null would fail
-    // validation (null is not string-or-integer); the batch-absent
-    // branch is overridden by per-row semantics when compat is off.
+    // Mode key absent from the first row: a present JSON null would
+    // fail validation (null is not string-or-integer). The second row
+    // carries Mode, so the column is batch-present and the first row
+    // takes the per-row "DEFAULT" branch.
     val res = Pipeline.process(
-      Seq("""{"Device_ID": 1, "Event_Time": ""}""").toDF(Pipeline.ValueCol),
-      prov.resolveFiltered(), cfgCi.copy(compatBatchPresence = false))
-    val r = res.valid.collect()(0)
+      Seq("""{"Device_ID": 1, "Event_Time": ""}""",
+        """{"Device_ID": 2, "Event_Time": "", "Mode": "a"}""").toDF(Pipeline.ValueCol),
+      prov.resolveFiltered(), cfgCi)
+    val r = res.valid.collect().minBy(_.getLong(0))
     res.release()
     assert(r.getTimestamp(1) == java.sql.Timestamp.valueOf("1970-01-01 00:00:00"),
       "datetime branch must apply despite case mismatch")

@@ -91,6 +91,32 @@ class Round14OpsSpec extends SparkSpec {
     // The stateful agg's micro-batch plan shuffles on the group key.
     assert(info.shape.getOrElse("ShuffleExchange", 0) >= 1,
       s"micro-batch plan shape missing the state shuffle: ${info.shape}")
+    // Every reported micro-batch's phase durations are kept, in order.
+    assert(info.batchDurationsMs.size == q.recentProgress.length)
+    assert(info.batchDurationsMs.nonEmpty && info.batchDurationsMs.forall(d =>
+      d.get("triggerExecution").exists(_ >= 0L)),
+      s"per-batch durations missing: ${info.batchDurationsMs}")
+    assert(info.batchDurationsMs.exists(_.contains("addBatch")))
+  }
+
+  test("PlanAudit.row: a broadcast join is no shuffle; only a global window is flagged") {
+    import org.apache.spark.sql.expressions.Window
+    val fact = spark.range(0, 1000).toDF("k")
+    val dim = spark.range(0, 10).toDF("k").withColumn("name", col("k") * 2)
+    val bhj = PlanAudit.row("bhj",
+      fact.join(broadcast(dim), "k").queryExecution.executedPlan)
+    assert(bhj.shape("ShuffleExchange") == 0, s"broadcast counted as a shuffle: ${bhj.shape}")
+    assert(bhj.shape("BroadcastExchange") == 1 && bhj.shape("BroadcastHashJoin") == 1)
+    assert(bhj.flags.isEmpty && bhj.windows == 0)
+
+    val ranked = spark.range(0, 100).toDF("id")
+    val global = PlanAudit.row("global", ranked
+      .withColumn("r", row_number().over(Window.orderBy("id"))).queryExecution.executedPlan)
+    assert(global.windows == 1 && global.flags == Seq("GlobalWindow(1)"), global.line)
+    val partitioned = PlanAudit.row("partitioned", ranked
+      .withColumn("r", row_number().over(Window.partitionBy(col("id") % 3).orderBy("id")))
+      .queryExecution.executedPlan)
+    assert(partitioned.windows == 1 && partitioned.flags.isEmpty, partitioned.line)
   }
 
   test("ScaleRehearsal.rotateText: mixed-case/numeric copies share zero shingles") {
