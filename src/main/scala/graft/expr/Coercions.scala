@@ -39,10 +39,11 @@ final case class PipelineConfig(
   * main.py:302 — output column order = schema order).
   *
   * Input representation: each Kafka/JSON record is parsed once with
-  * `try_parse_json` into a VARIANT; fields are extracted with
-  * `variant_get`. VARIANT preserves JSON token types (string vs number
-  * vs null vs missing), which the coercion branches read from each
-  * field's kind code ([[Validation.kindOf]]):
+  * `try_parse_json` into a VARIANT, and each field is read with
+  * [[VariantFields.get]], which equals `try_variant_get`. VARIANT
+  * preserves JSON token types (string vs number vs null vs missing),
+  * which the coercion branches read from each field's kind code
+  * ([[Validation.kindOf]]):
   *   - SQL NULL kind                ⇔ key missing in the row
   *   - [[Validation.KVoid]]         ⇔ key present with JSON null
   * The reference sees both as Polars null (missing keys become null when
@@ -50,12 +51,6 @@ final case class PipelineConfig(
   * we keep the distinction available but collapse it the same way.
   */
 object Coercions {
-
-  /** Variant path for a top-level field. */
-  def path(name: String): String = "$." + name
-
-  /** Raw variant value of a field: SQL NULL iff the key is missing. */
-  def field(v: Column, name: String): Column = variant_get(v, path(name), "variant")
 
   /** Present = key exists with a non-null JSON value (what the
     * reference's `pl.col(c).is_null()` is false for, main.py:277, 284),
@@ -106,7 +101,7 @@ object Coercions {
     * main.py:269-271).
     */
   def datetimeExpr(v: Column, m: ColumnMeta): Column = {
-    val s = try_variant_get(v, path(m.name), "string")
+    val s = VariantFields.get(v, m.name, StringType)
     val target = m.dataType match {
       case DateType => DateType
       case _        => TimestampType
@@ -127,7 +122,7 @@ object Coercions {
     * note 2).
     */
   def stringEnumExpr(v: Column, kind: Column, m: ColumnMeta): Column =
-    when(presentNonNull(kind), try_variant_get(v, path(m.name), "string"))
+    when(presentNonNull(kind), VariantFields.get(v, m.name, StringType))
       .otherwise(lit("DEFAULT"))
       .alias(m.name)
 
@@ -140,7 +135,7 @@ object Coercions {
     * note 3).
     */
   def genericExpr(v: Column, kind: Column, m: ColumnMeta): Column =
-    when(presentNonNull(kind), try_variant_get(v, path(m.name), m.dataType.catalogString))
+    when(presentNonNull(kind), VariantFields.get(v, m.name, m.dataType))
       .otherwise(lit(m.default).cast(m.dataType))
       .alias(m.name)
 

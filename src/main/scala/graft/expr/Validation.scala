@@ -1,13 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.expressions.variant.SchemaOfVariant
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types._
-import org.apache.spark.types.variant.Variant
-import org.apache.spark.unsafe.types.VariantVal
 
 import graft.types.{ColumnMeta, JsonKind}
 
@@ -29,19 +23,18 @@ import graft.types.{ColumnMeta, JsonKind}
   *     required-then-schema order) is the row's error message
   *     (main.py:222-227; fastjsonschema raises on the first failure).
   *
-  * JSON token kinds are recovered from the VARIANT encoding via
-  * `schema_of_variant`: parse_json stores JSON integers as
-  * TINYINT..BIGINT or DECIMAL(p,0) (huge), floats as DECIMAL(p,s>0) or
-  * DOUBLE, strings as STRING, booleans as BOOLEAN. Documented
-  * divergence: a JSON `5.0` is stored as DECIMAL(1,0) and accepted as
-  * integer — the JSON-Schema *spec* behavior (zero fractional part),
-  * where fastjsonschema's isinstance(int) would reject it.
+  * JSON token kinds are read from the VARIANT encoding: parse_json
+  * stores JSON integers as TINYINT..BIGINT or DECIMAL(p,0) (huge),
+  * floats as DECIMAL(p,s>0) or DOUBLE, strings as STRING, booleans as
+  * BOOLEAN. Documented divergence: a JSON `5.0` is stored as
+  * DECIMAL(1,0) and accepted as integer — the JSON-Schema *spec*
+  * behavior (zero fractional part), where fastjsonschema's
+  * isinstance(int) would reject it.
   *
   * Each field's token type is read once per row into a one-byte kind
-  * code ([[kindOf]]: `schema_of_variant(variant_get(v, '$.col'))`,
-  * classified without building its string). The row check, the
-  * batch-presence pass and the coercions' present-and-non-null test
-  * all read those codes instead of walking the variant again.
+  * code ([[kindOf]]). The row check, the batch-presence pass and the
+  * coercions' present-and-non-null test all read those codes instead
+  * of walking the variant again.
   */
 object Validation {
 
@@ -52,28 +45,12 @@ object Validation {
   val KString: Byte = 3
   val KOther: Byte = 4    // boolean, object, array
 
-  /** The kind code of one present field: the type `schema_of_variant`
-    * reports for it, read as a DataType rather than its SQL string.
-    * Generated code calls it through [[kindOf]]; a JSON integer, float,
-    * string or null always takes one of the first four codes.
+  /** One field's kind code: NULL iff the key is missing, else the class
+    * of the type `schema_of_variant` reports for the field, read from
+    * the field's header by [[VariantFields.kind]]. A JSON integer,
+    * float, string or null always takes one of the first four codes.
     */
-  def kindCodeOf(field: VariantVal): Byte =
-    SchemaOfVariant.schemaOf(new Variant(field.getValue, field.getMetadata)) match {
-      case NullType => KVoid
-      case ByteType | ShortType | IntegerType | LongType => KInteger
-      case d: DecimalType => if (d.scale == 0) KInteger else KFraction
-      case FloatType | DoubleType => KFraction
-      case _: StringType => KString
-      case _ => KOther
-    }
-
-  /** One field's kind code: NULL iff the key is missing. One
-    * `variant_get` and one static call per row, so a projection of
-    * every sink column's kind stays a small generated method.
-    */
-  def kindOf(v: Column, name: String): Column =
-    bridge.column(StaticInvoke(Validation.getClass, ByteType, "kindCodeOf",
-      Seq(bridge.expression(Coercions.field(v, name))), returnNullable = false))
+  def kindOf(v: Column, name: String): Column = VariantFields.kind(v, name)
 
   /** Kind codes that satisfy the column's JSON kind. */
   private def accepted(kind: JsonKind): Seq[Byte] = kind match {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AtomicType, DataType}
 
 /** Access bridge for `private[sql]` Spark internals used by graft's
   * custom Catalyst expressions and plans (the supported extension
@@ -13,6 +14,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Whether `VariantGet.cast` takes its atomic-type branch for `dt`
+    * (`AtomicType` is private[sql]).
+    */
+  def isAtomic(dt: DataType): Boolean = dt.isInstanceOf[AtomicType]
 
   /** Wrap a custom LogicalPlan as a DataFrame (Dataset.ofRows is
     * private[sql]) — the entry point for graft's native operators.

@@ -6,8 +6,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.variant.{SchemaOfVariant, VariantGet}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.functions.{col, concat, lit, when}
+import org.apache.spark.sql.functions.{array, col, concat, element_at, lit, when}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.Trigger
 
@@ -106,20 +107,67 @@ class IngestBatchSpec extends SparkSpec {
     assert(jobsInProcess(provider.resolveFiltered(), cfg) == 1)
   }
 
+  /** The persisted parse under a batch's valid side. */
+  private def parsePlan(res: graft.pipeline.BatchResult) = {
+    val parse = res.valid.queryExecution.executedPlan.collect {
+      case s: InMemoryTableScanExec => s.relation.cachedPlan
+    }
+    assert(parse.size == 1, "the valid side reads the persisted parse")
+    parse.head
+  }
+
+  /** Every generated method of `plan`'s whole-stage code stays under
+    * 8,000 bytes; HotSpot never JIT-compiles a larger one.
+    */
+  private def assertJitSized(stage: String, plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+    assert(stages.nonEmpty, s"the $stage stage runs whole-stage generated code")
+    stages.foreach { case (subtree, _, stats) =>
+      assert(stats.maxMethodCodeSize < 8000,
+        s"a ${stats.maxMethodCodeSize}-byte $stage method is never JIT-compiled:\n$subtree")
+    }
+  }
+
   test("every generated method of the parse/validate stage fits HotSpot's 8,000-byte JIT limit") {
     val res = Pipeline.process(payloads(100, 10), provider.resolveFiltered(), cfg)
+    try assertJitSized("parse/validate", parsePlan(res))
+    finally res.release()
+  }
+
+  test("every generated method of the valid side's coerce stage fits HotSpot's 8,000-byte JIT limit") {
+    val res = Pipeline.process(payloads(100, 10), provider.resolveFiltered(), cfg)
+    try assertJitSized("coerce", res.valid.queryExecution.executedPlan)
+    finally res.release()
+  }
+
+  test("the parse and valid plans read fields natively; a dotted name keeps try_variant_get") {
+    def variantNodes(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      plan.collect { case p => p.expressions }.flatten.flatMap(_.collect {
+        case e: VariantGet => e.prettyName
+        case e: SchemaOfVariant => e.prettyName
+      })
+    val res = Pipeline.process(payloads(100, 10), provider.resolveFiltered(), cfg)
     try {
-      val parse = res.valid.queryExecution.executedPlan.collect {
-        case s: InMemoryTableScanExec => s.relation.cachedPlan
-      }
-      assert(parse.size == 1, "the valid side reads the persisted parse")
-      val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(parse.head)
-      assert(stages.nonEmpty, "the parse runs whole-stage generated code")
-      stages.foreach { case (subtree, _, stats) =>
-        assert(stats.maxMethodCodeSize < 8000,
-          s"a ${stats.maxMethodCodeSize}-byte method is never JIT-compiled:\n$subtree")
-      }
+      assert(variantNodes(parsePlan(res)).isEmpty)
+      assert(variantNodes(res.valid.queryExecution.executedPlan).isEmpty)
     } finally res.release()
+
+    // "$.a.b" is the path a -> b, not the key "a.b", as it is for try_variant_get.
+    val dotted = SchemaProvider.fromDescribeRows(Seq("id" -> "Int64", "a.b" -> "Int64"))
+      .resolveFiltered()
+    val docs = Seq("""{"id": 1, "a": {"b": 5}}""", """{"id": 2, "a.b": 7}""",
+      """{"id": 3, "a": {"b": "9"}}""", """{"id": 4, "a": 1}""")
+    // Not a local relation, which the optimizer would evaluate up front.
+    val raw = spark.range(0, docs.size, 1, 2).select(
+      element_at(array(docs.map(lit): _*), (col("id") + 1).cast("int")).as(Pipeline.ValueCol))
+    val b = Pipeline.process(raw, dotted, PipelineConfig(stringEnumCols = Set.empty))
+    try {
+      assert(variantNodes(parsePlan(b)).nonEmpty && variantNodes(b.valid.queryExecution.executedPlan)
+        .contains("try_variant_get"))
+      val got = b.valid.orderBy("id").collect().map(r => r.getLong(0) -> r.get(1)).toSeq
+      assert(got == Seq(1L -> 5L, 2L -> Long.MinValue, 4L -> Long.MinValue))
+      assert(b.dlq.collect().map(_.getString(1)).toSeq == Seq("data.a.b must be integer"))
+    } finally b.release()
   }
 
   test("a second streaming query compiles no class on its first trigger") {
