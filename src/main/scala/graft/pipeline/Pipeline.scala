@@ -25,14 +25,16 @@ final case class BatchCounts(present: Set[String], valid: Long, dlq: Long)
   * variant, and `dlq` is the one cached reader of the payload.
   * `validRaw`, the valid rows' original payloads, is not read from the
   * cache: it re-parses the input. Only the drift path's second failure
-  * reads it, and that path has re-run `process` already.
+  * reads it, and that path has re-run `process` already, so it is
+  * built (and analysed) on that first read only.
   */
 final class BatchResult private[pipeline] (
     val valid: DataFrame,
     val dlq: DataFrame,
-    val validRaw: DataFrame,
+    raw: () => DataFrame,
     parsed: DataFrame,
     pass: () => BatchCounts) {
+  lazy val validRaw: DataFrame = raw()
   /** The batch pass: one Spark job that materializes the persisted
     * parse and counts both sides. Runs at most once; `process` has
     * already run it when a column needs batch presence.
@@ -143,7 +145,7 @@ object Pipeline {
     // Original payloads of the VALID rows — the reference pushes these
     // (not the coerced form) to the DLQ if the post-retry insert still
     // fails (main.py:446-450). Not cached: recomputed from the input.
-    val validRaw = parsedPlan.filter(col(Err).isNull).select(value.as("row"))
-    new BatchResult(valid, dlq, validRaw, parsed, () => counts)
+    def validRaw = parsedPlan.filter(col(Err).isNull).select(value.as("row"))
+    new BatchResult(valid, dlq, () => validRaw, parsed, () => counts)
   }
 }

@@ -1,8 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.io.PosixLocalFileSystem
 import graft.pipeline.BatchOrchestrator
 
 /** The service loop (reference §3.1, main.py:468-534) as a Structured
@@ -37,6 +41,20 @@ import graft.pipeline.BatchOrchestrator
   * nothing else. A deployment that serves Spark Connect clients or adds
   * JARs/classes per session must run the stream on a session of its
   * own: with isolation off, a session sees the others' artifacts.
+  *
+  * Local files ([[LocalFsPolicy]], [[CheckpointManager]]): `start` also
+  * makes the session write `file:` paths through
+  * [[graft.io.PosixLocalFileSystem]], so no parquet part, `.crc`,
+  * commit directory or marker forks `chmod`. The FileSystem cache is
+  * off for `file:` because it is JVM-wide and may already hold Hadoop's
+  * own local file system. Spark writes the offset WAL, commit log and
+  * source log through FileContext by default, which always uses
+  * Hadoop's own local file system; for a `file:` checkpoint `start`
+  * selects Spark's FileSystem-based manager instead. On `file:` the
+  * FileContext manager's no-overwrite rename is already an existence
+  * check followed by rename(2) (`ChecksumFs.renameInternal`), which is
+  * what the FileSystem manager does, so nothing is lost. A checkpoint
+  * on any other file system keeps Spark's default manager.
   */
 object StreamJob {
 
@@ -45,13 +63,40 @@ object StreamJob {
     */
   val SessionPolicy: (String, String) = "spark.sql.artifact.isolation.enabled" -> "false"
 
+  /** `file:` through graft's fork-free local file system, uncached. */
+  val LocalFsPolicy: Seq[(String, String)] = Seq(
+    "fs.file.impl" -> classOf[PosixLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** The checkpoint manager `start` selects for a `file:` checkpoint. */
+  val CheckpointManager: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName
+
+  /** Whether `dir` resolves to `file:` (a path without a scheme takes
+    * the default file system's).
+    */
+  private[graft] def onLocalFs(dir: String, hadoopConf: Configuration): Boolean =
+    Option(new Path(dir).toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme) == "file"
+
+  /** Sets the session entries above for a query checkpointed at
+    * `checkpointDir`; a non-`file:` checkpoint unsets the manager.
+    */
+  private[graft] def configure(spark: org.apache.spark.sql.SparkSession, checkpointDir: String): Unit = {
+    (SessionPolicy +: LocalFsPolicy).foreach { case (k, v) => spark.conf.set(k, v) }
+    if (onLocalFs(checkpointDir, spark.sessionState.newHadoopConf()))
+      spark.conf.set(CheckpointManager._1, CheckpointManager._2)
+    else spark.conf.unset(CheckpointManager._1)
+  }
+
   def start(
       raw: DataFrame,
       orchestrator: BatchOrchestrator,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
     // Read by the clone `start()` makes, so it must be set before it.
-    raw.sparkSession.conf.set(SessionPolicy._1, SessionPolicy._2)
+    configure(raw.sparkSession, checkpointDir)
     raw.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         orchestrator.processBatch(batch, id)

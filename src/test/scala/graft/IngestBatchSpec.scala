@@ -170,6 +170,21 @@ class IngestBatchSpec extends SparkSpec {
     } finally b.release()
   }
 
+  test("non-ASCII keys and string values pass through Pipeline.process unchanged") {
+    val key = "café"
+    val metas = SchemaProvider.fromDescribeRows(Seq(
+      "id" -> "Int64", key -> "String", "note" -> "String")).resolveFiltered()
+    val doc = s"""{"id": 1, "$key": "crème ✓", "note": "naïve 😀"}"""
+    val raw = spark.range(0, 1, 1, 1).select(lit(doc).as(Pipeline.ValueCol))
+    val res = Pipeline.process(raw, metas, PipelineConfig(required = Seq(key),
+      stringEnumCols = Set.empty))
+    try {
+      assert(res.dlq.count() == 0)
+      val row = res.valid.collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      assert(row == Seq((1L, "crème ✓", "naïve 😀")))
+    } finally res.release()
+  }
+
   test("a second streaming query compiles no class on its first trigger") {
     val topic = s"${tmp()}/topic"
     payloads(2000, 10).write.text(topic)
