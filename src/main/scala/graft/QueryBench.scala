@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   *     confs (stream-start partitions + RocksDB provider, q337's
   *     bloom dials, q358's scripting toggle) and temp views are
   *     tenant-local and one tenant's conf window can never skew a
-  *     sibling's plan; per-session `Queries.sessionConfLock(s)` stays as the
+  *     sibling's plan; `StreamJob.withConf`'s per-session lock stays as the
   *     same-session belt (Round13OpsSpec's shared-session test);
   *   - each runner submits its jobs into its OWN scheduler pool
   *     (`spark.scheduler.pool = runner-i`) under FAIR mode — pools

@@ -5,7 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
-import graft.streaming.StatefulSessions
+import graft.streaming.{StatefulSessions, StreamJob}
 
 /** Streaming SOAK run (round-13 verdict ask #3): the rehearsal drains
   * are single-session and a handful of micro-batches — state health
@@ -56,11 +56,7 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/tmp/graft_scale10x")
     val nFiles = if (args.length > 1) args(1).toInt else 300
-    val spark = Harness.session(
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    val spark = Harness.session("spark.sql.shuffle.partitions" -> "8")
 
     // --- stage the long topic: N ts-range files, written in order ---
     val ev = StatefulSessions.project(
@@ -125,13 +121,10 @@ object StreamSoak {
         .product[StatefulSessions.SEvent])
       .withWatermark("ts", "0 seconds")
     val t0 = System.nanoTime()
-    val q = StatefulSessions.sessionizeStreamTws(stream0, gapUs).toDF()
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckptDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val q = StreamJob.startStream(spark, ckptDir, Trigger.AvailableNow(), StreamJob.RocksProvider) {
+      StatefulSessions.sessionizeStreamTws(stream0, gapUs).toDF()
+        .writeStream.format("parquet").option("path", outDir).outputMode("append")
+    }
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
     spark.streams.removeListener(listener)

@@ -9,6 +9,7 @@ import graft.operators.{Compaction, PrefixSum}
 import graft.sources.Tables
 import graft.functions.TextFunctions
 import graft.operators.Dedup
+import graft.streaming.StreamJob
 
 /** Query family: sources, sinks, storage layout and table-maintenance — DSv2 legs, round-trips, compaction/Z-order/bucketing, pruning, advisors, contracts.
   * Split from the monolithic Queries.scala (round 13) with def
@@ -1188,19 +1189,11 @@ private[graft] trait QueriesIo { this: Queries.type =>
   }
 
   def q337_runtime_bloom_join(s: SparkSession, dir: String): DataFrame =
-      sessionConfLock(s).synchronized {
-    val keep = runtimeBloomConfs
-    val prev = keep.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      keep.foreach { case (k, v) => s.conf.set(k, v) }
+    StreamJob.withConf(s, runtimeBloomConfs) {
       val agg = runtimeBloomAgg(s, dir)
       val rows = agg.collect() // ≤3 return flags — bounded by construction
       s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
-  }
 
   private[graft] def ioAll: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q35_ingest_pipeline" -> (q35_ingest_pipeline _),

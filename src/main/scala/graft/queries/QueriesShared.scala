@@ -9,6 +9,7 @@ import graft.operators.{Compaction, PrefixSum}
 import graft.sources.Tables
 import graft.functions.TextFunctions
 import graft.operators.Dedup
+import graft.streaming.StreamJob
 
 /** Shared helpers for the query families (split from the
   * monolithic Queries.scala in round 13, bodies verbatim):
@@ -335,73 +336,6 @@ private[graft] trait QueriesShared { this: Queries.type =>
         .withWatermark("pts", "0 seconds"))
   }
 
-  /** Runs `body` (a streaming-query `start()`) with
-    * `spark.sql.shuffle.partitions` sized to the STREAM'S STATE, not
-    * the session's batch default: state-store partition count is a
-    * checkpoint-pinned property of the stream, and every partition is
-    * a per-epoch state commit (file + fsync — and for RocksDB a store
-    * instance + changelog) whether or not it holds keys, so a
-    * production job sizes it to the per-epoch key volume at startup.
-    * For the test topics 4 partitions is the measured knee: 8→4 cut
-    * the judged drains' cold medians 10-23% (every epoch pays half
-    * the commit fanout) while n=2 bought nothing more (the join/agg
-    * work itself is already sub-second at this SF). At 100 TB the
-    * same knob is set HIGHER than the batch default; the point is it
-    * is set per-stream, not inherited.
-    *
-    * The whole set→start→restore window runs under [[sessionConfLock]]
-    * (session confs are SESSION-wide mutable state): concurrent
-    * runners ON THE SAME SESSION must not race the set/restore pair.
-    * The lock is PER-SESSION (weak-keyed, so cloned tenant sessions
-    * are collectable): two tenants on different sessions mutate
-    * disjoint SQLConfs and never contend — only same-session runners
-    * serialize, which is exactly the hazard. For the streaming
-    * windows here the lock is held only while `start()` builds the
-    * stream's conf snapshot, never across the drain; the two BATCH
-    * conf windows (q337's bloom dials, q358's scripting toggle) hold
-    * it across their bounded executions — so the lock alone is a
-    * belt, not the serving-shape isolation. Real multi-tenant
-    * isolation is one CLONED SESSION per tenant (`spark.newSession()`,
-    * the Thrift-server shape QueryBench runs): session confs and temp
-    * views become tenant-local, and a sibling's lock-free planning
-    * can never observe a mid-toggle conf because the toggle happens
-    * on a different SQLConf. `extraConf` carries additional
-    * per-stream confs (e.g. the RocksDB state-store provider) into
-    * the same window.
-    */
-  private[graft] val confLocks = new java.util.WeakHashMap[SparkSession, Object]
-
-  private[graft] def sessionConfLock(s: SparkSession): Object =
-    confLocks.synchronized(confLocks.computeIfAbsent(s, _ => new Object))
-
-  private[graft] def withStreamPartitions[T](s: SparkSession, n: Int = 4,
-      extraConf: Map[String, String] = Map.empty)(body: => T): T =
-    sessionConfLock(s).synchronized {
-      val keys = extraConf.keySet + "spark.sql.shuffle.partitions"
-      val prevs = keys.toSeq.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-      extraConf.foreach { case (k, v) => s.conf.set(k, v) }
-      try body finally prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-    }
-
-  /** Session conf selecting the RocksDB state-store provider for a
-    * streaming run — rides [[withStreamPartitions]]'s conf window via
-    * runToParquetSink's `extraConf`.
-    */
-  private[graft] val RocksProvider = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    // Changelog checkpointing: each commit ships the epoch's change
-    // set instead of a full SST snapshot — the production setting for
-    // short-epoch jobs (snapshot upload cost moves to a background
-    // cadence), and at 100 TB state it is the difference between
-    // per-epoch O(delta) and O(state).
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      "true")
-
   /** The q328/q333/q340 interval-join condition, in ONE place so the
     * window bound can never silently diverge between the three
     * streaming forms and their shared oracle pattern: a purchase
@@ -419,21 +353,11 @@ private[graft] trait QueriesShared { this: Queries.type =>
     */
   private[graft] def runToParquetSink(s: SparkSession, df: DataFrame,
       tag: String, extraConf: Map[String, String] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val outDir = java.nio.file.Files
       .createTempDirectory(s"graft_${tag}_out_").toString
-    val q = withStreamPartitions(s, extraConf = extraConf) {
-      df.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory(s"graft_${tag}_ckpt_").toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    StreamJob.drain(s, tag, extraConf) {
+      df.writeStream.format("parquet").option("path", outDir).outputMode("append")
     }
-    q.awaitTermination()
-    // Scale telemetry for ScaleRehearsal's streaming drains: the
-    // micro-batch plan shape, final state-store totals and per-batch
-    // durations, keyed by tag.
-    PlanShape.captureStream(tag, q)
     s.read.parquet(outDir)
   }
 

@@ -9,6 +9,7 @@ import graft.operators.{Compaction, PrefixSum}
 import graft.sources.Tables
 import graft.functions.TextFunctions
 import graft.operators.Dedup
+import graft.streaming.StreamJob
 
 /** Query family: SQL-surface legs — subqueries, grouping sets, recursive/pipe/script/parameterized SQL, SQL UDFs.
   * Split from the monolithic Queries.scala (round 13) with def
@@ -158,55 +159,46 @@ private[graft] trait QueriesSql { this: Queries.type =>
     */
   def q358_sql_script(s: SparkSession, dir: String): DataFrame = {
     // Concurrent-runner safe: per-invocation unique view name (dropped in
-    // finally) and the session-wide scripting-conf toggle serialized under
-    // a lock — two runners on different dirs must not clobber each other's
+    // finally) and the session-wide scripting toggle in StreamJob's conf
+    // window — two runners on different dirs must not clobber each other's
     // view or race the set/restore pair (CacheRegistry.withScope contract).
     val view = s"q358_orders_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     t(s, dir, "orders").createOrReplaceTempView(view)
-    try sessionConfLock(s).synchronized {
-      val prev = s.conf.getOption("spark.sql.scripting.enabled")
-      try {
-        s.conf.set("spark.sql.scripting.enabled", "true")
-        // A '~total' summary row (found threshold, probe-iteration
-        // count, rows-above-cutoff) rides ahead of the rollup so the
-        // judged frame is NON-EMPTY at every SF: at sf0.1 the search
-        // doubles past the price envelope and the rollup alone is 0
-        // rows — both engines agreed on the empty frame, but an empty
-        // judged frame pins only the agreement, not the WHILE loop's
-        // fixpoint. Now the threshold and iteration count themselves
-        // are hash-checked everywhere ('~' sorts after every real
-        // priority in both engines' binary collation).
-        val out = s.sql(
-          s"""BEGIN
-             |  DECLARE t DOUBLE DEFAULT 1000.0;
-             |  DECLARE n BIGINT DEFAULT 10000;
-             |  DECLARE iters BIGINT DEFAULT 0;
-             |  WHILE n >= 10000 DO
-             |    SET t = t * 2;
-             |    SET iters = iters + 1;
-             |    SET n = (SELECT count(*) FROM $view WHERE o_totalprice > t);
-             |  END WHILE;
-             |  SELECT o_orderpriority, t AS threshold, iters AS n_iters,
-             |         count(*) AS n_orders,
-             |         round(sum(o_totalprice), 2) AS revenue
-             |  FROM $view WHERE o_totalprice > t
-             |  GROUP BY o_orderpriority, t, iters
-             |  UNION ALL
-             |  SELECT '~total' AS o_orderpriority, t AS threshold,
-             |         iters AS n_iters, n AS n_orders,
-             |         round(coalesce((SELECT sum(o_totalprice) FROM $view
-             |                         WHERE o_totalprice > t), 0.0), 2) AS revenue
-             |  ORDER BY o_orderpriority;
-             |END""".stripMargin)
-        // Materialize (the rollup is ~5 rows) before the view drops — the
-        // returned plan must not lazily re-read the per-invocation view.
-        out.localCheckpoint(eager = true)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-          case None => s.conf.unset("spark.sql.scripting.enabled")
-        }
-      }
+    try StreamJob.withConf(s, Seq("spark.sql.scripting.enabled" -> "true")) {
+      // A '~total' summary row (found threshold, probe-iteration
+      // count, rows-above-cutoff) rides ahead of the rollup so the
+      // judged frame is NON-EMPTY at every SF: at sf0.1 the search
+      // doubles past the price envelope and the rollup alone is 0
+      // rows — both engines agreed on the empty frame, but an empty
+      // judged frame pins only the agreement, not the WHILE loop's
+      // fixpoint. Now the threshold and iteration count themselves
+      // are hash-checked everywhere ('~' sorts after every real
+      // priority in both engines' binary collation).
+      val out = s.sql(
+        s"""BEGIN
+           |  DECLARE t DOUBLE DEFAULT 1000.0;
+           |  DECLARE n BIGINT DEFAULT 10000;
+           |  DECLARE iters BIGINT DEFAULT 0;
+           |  WHILE n >= 10000 DO
+           |    SET t = t * 2;
+           |    SET iters = iters + 1;
+           |    SET n = (SELECT count(*) FROM $view WHERE o_totalprice > t);
+           |  END WHILE;
+           |  SELECT o_orderpriority, t AS threshold, iters AS n_iters,
+           |         count(*) AS n_orders,
+           |         round(sum(o_totalprice), 2) AS revenue
+           |  FROM $view WHERE o_totalprice > t
+           |  GROUP BY o_orderpriority, t, iters
+           |  UNION ALL
+           |  SELECT '~total' AS o_orderpriority, t AS threshold,
+           |         iters AS n_iters, n AS n_orders,
+           |         round(coalesce((SELECT sum(o_totalprice) FROM $view
+           |                         WHERE o_totalprice > t), 0.0), 2) AS revenue
+           |  ORDER BY o_orderpriority;
+           |END""".stripMargin)
+      // Materialize (the rollup is ~5 rows) before the view drops — the
+      // returned plan must not lazily re-read the per-invocation view.
+      out.localCheckpoint(eager = true)
     } finally s.catalog.dropTempView(view)
   }
 

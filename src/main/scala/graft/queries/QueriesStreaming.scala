@@ -9,6 +9,7 @@ import graft.operators.{Compaction, PrefixSum}
 import graft.sources.Tables
 import graft.functions.TextFunctions
 import graft.operators.Dedup
+import graft.streaming.StreamJob
 
 /** Query family: Structured Streaming legs — stateful sessions/joins/dedup, state stores, drains.
   * Split from the monolithic Queries.scala (round 13) with def
@@ -136,11 +137,9 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
       .as[StatefulSessions.SEvent](org.apache.spark.sql.Encoders
         .product[StatefulSessions.SEvent])
       .withWatermark("ts", "0 seconds")
-    // RocksDB provider rides runToParquetSink's locked conf window
-    // (set → start → restore under sessionConfLock) — concurrency-safe.
     val sessions = runToParquetSink(s,
       StatefulSessions.sessionizeStreamTws(stream0, gapUs).toDF(), "tws",
-      RocksProvider)
+      StreamJob.RocksProvider)
     sessions
       .select(col("key").as("user_id"),
         timestamp_micros(col("startUs")).as("s_start"),
@@ -162,7 +161,6 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
     * right tool.
     */
   def q327_stream_static_enrich(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val orders = t(s, dir, "orders")
       .select("o_custkey", "o_totalprice")
     val stageDir = stagedParquet(s"ss|$dir") { d =>
@@ -174,18 +172,14 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
       .select(col("c_custkey"), col("n_name"))
     val n = Queries.twsRuns.incrementAndGet()
     val table = s"graft_stream_static_$n"
-    val q = withStreamPartitions(s) {
+    StreamJob.drain(s, "ss") {
       s.readStream.schema(orders.schema).parquet(stageDir)
         .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory("graft_ss_ckpt_").toString)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        .writeStream.format("memory").queryName(table).outputMode("complete")
     }
-    q.awaitTermination()
     s.table(table).orderBy("n_name")
   }
 
@@ -262,23 +256,18 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
     * batch union oracle.
     */
   def q343_stream_union_sources(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val (cs, ps) = sojStreams(s, dir)
     val unioned = cs.select(col("cts").as("ts"), lit("click").as("kind"))
       .unionByName(ps.select(col("pts").as("ts"), lit("purchase").as("kind")))
     val n = Queries.twsRuns.incrementAndGet()
     val table = s"graft_usrc_$n"
-    val q = withStreamPartitions(s) {
+    StreamJob.drain(s, "usrc") {
       unioned
         .groupBy(window(col("ts"), "1 day").as("w"), col("kind"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("w.start").as("day"), col("kind"), col("n_events"))
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory("graft_usrc_ckpt_").toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .writeStream.format("memory").queryName(table).outputMode("append")
     }
-    q.awaitTermination()
     s.table(table).orderBy("day", "kind")
   }
 
@@ -295,22 +284,17 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
     * batch count(DISTINCT) oracle.
     */
   def q344_stream_dedup_window(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val (_, ps) = sojStreams(s, dir)
     val n = Queries.twsRuns.incrementAndGet()
     val table = s"graft_ddw_$n"
-    val q = withStreamPartitions(s) {
+    StreamJob.drain(s, "ddw") {
       ps.withColumn("w", window(col("pts"), "1 day"))
         .dropDuplicates("p_user", "w")
         .groupBy(col("w"))
         .agg(count(lit(1)).as("n_users"))
         .select(col("w.start").as("day"), col("n_users"))
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory("graft_ddw_ckpt_").toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .writeStream.format("memory").queryName(table).outputMode("append")
     }
-    q.awaitTermination()
     s.table(table).orderBy("day")
   }
 
@@ -379,7 +363,7 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
         .product[MapStateRevenue.REvent])
       .withWatermark("ts", "0 seconds")
     val snaps = runToParquetSink(s,
-      MapStateRevenue.dailyRevenue(stream).toDF(), "msr", RocksProvider)
+      MapStateRevenue.dailyRevenue(stream).toDF(), "msr", StreamJob.RocksProvider)
     snaps.groupBy(col("key").as("user_id"), col("day"))
       .agg(max_by(col("cents"), col("tagMs")).as("c"))
       .select(col("user_id"),
@@ -439,7 +423,7 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
       .withWatermark("ts", "0 seconds")
     val snaps = runToParquetSink(s,
       MapStateRevenue.dailyRevenueWithInit(stream, init).toDF(), "ini",
-      RocksProvider)
+      StreamJob.RocksProvider)
     snaps.groupBy(col("key").as("user_id"), col("day"))
       .agg(max_by(col("cents"), col("tagMs")).as("c"))
       .select(col("user_id"),
@@ -482,7 +466,7 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
         .product[ListStateMedian.MEvent])
       .withWatermark("ts", "0 seconds")
     val snaps = runToParquetSink(s,
-      ListStateMedian.medians(stream).toDF(), "lsm", RocksProvider)
+      ListStateMedian.medians(stream).toDF(), "lsm", StreamJob.RocksProvider)
     snaps.groupBy(col("key").as("user_id"))
       .agg(max_by(struct(col("n"), col("medianCents")), col("tagMs")).as("m"))
       .select(col("user_id"), col("m.n").as("n_purchases"),
@@ -554,7 +538,6 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
     * collect), and the judged state itself is nation-grain bounded.
     */
   def q347_state_reader(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val orders = t(s, dir, "orders").select("o_custkey", "o_totalprice")
     val stageDir = stagedParquet(s"ss|$dir") { d =>
       orders.write.mode("overwrite").parquet(d)
@@ -563,19 +546,14 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
       .join(broadcast(t(s, dir, "nation").select("n_nationkey", "n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stread_ckpt_").toString
-    val q = withStreamPartitions(s) {
+    val ckpt = StreamJob.drain(s, "stread") {
       s.readStream.schema(orders.schema).parquet(stageDir)
         .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
-        .writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        .writeStream.format("noop").outputMode("complete")
     }
-    q.awaitTermination()
     // The agg buffer holds (count, RAW sum) — round() is an output
     // projection, not buffer state — so the round happens here.
     s.read.format("statestore").option("path", ckpt).load()
@@ -600,7 +578,6 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
     * table.
     */
   def q349_state_changefeed(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val orders = t(s, dir, "orders").select("o_custkey", "o_totalprice")
     val stageDir = stagedParquet(s"ss|$dir") { d =>
       orders.write.mode("overwrite").parquet(d)
@@ -609,9 +586,7 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
       .join(broadcast(t(s, dir, "nation").select("n_nationkey", "n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stcf_ckpt_").toString
-    val q = withStreamPartitions(s) {
+    val ckpt = StreamJob.drain(s, "stcf") {
       s.readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", 8) // force a multi-batch history
         .parquet(stageDir)
@@ -619,11 +594,8 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
-        .writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        .writeStream.format("noop").outputMode("complete")
     }
-    q.awaitTermination()
     val feed = s.read.format("statestore")
       .option("path", ckpt)
       .option("readChangeFeed", "true")
@@ -703,12 +675,11 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
     * to runToParquetSink like q328/q345.
     */
   def q333_stream_join_window(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val (cs, ps) = sojStreams(s, dir)
     val n = Queries.twsRuns.incrementAndGet()
     val table = s"graft_sjw_$n"
     val joined = cs.join(ps, sojCondition)
-    val q = withStreamPartitions(s) {
+    StreamJob.drain(s, "sjw") {
       joined
         .groupBy(window(col("pts"), "1 day").as("w"),
           coalesce(col("campaign"), lit(-1L)).as("campaign"))
@@ -716,13 +687,8 @@ private[graft] trait QueriesStreaming { this: Queries.type =>
           round(sum("value"), 2).as("total_value"))
         .select(col("w.start").as("day"), col("campaign"),
           col("n_pairs"), col("total_value"))
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory("graft_sjw_ckpt_").toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .writeStream.format("memory").queryName(table).outputMode("append")
     }
-    q.awaitTermination()
-    PlanShape.captureStream("sjw", q)
     s.table(table).orderBy("day", "campaign")
   }
 

@@ -38,4 +38,15 @@ object bridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** Block until `q`'s thread has built its sources or stopped
+    * (`awaitInitialization` is private[sql]); a failure is left for
+    * `awaitTermination` to report.
+    */
+  def awaitSources(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = q match {
+    case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+      try w.streamingQuery.awaitInitialization(Long.MaxValue)
+      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
+    case _ => ()
+  }
 }

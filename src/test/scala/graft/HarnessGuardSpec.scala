@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the session builder and the cache-hygiene sequence in
-  * [[Harness]]: a new tool under src/main/scala that pastes either
-  * instead of calling the harness fails here.
+  * [[Harness]], and stream starts and session conf windows in
+  * `StreamJob`: a new tool under src/main/scala that pastes one
+  * instead of calling them fails here.
   */
 class HarnessGuardSpec extends AnyFunSuite {
 
@@ -41,5 +42,22 @@ class HarnessGuardSpec extends AnyFunSuite {
   test("Harness holds each of them exactly once") {
     val harness = codeLines.filter(_._1.getFileName.toString == "Harness.scala").map(_._3)
     for (p <- Pasted) assert(harness.count(_.contains(p)) == 1, p)
+  }
+
+  /** A stream's checkpoint and trigger, and a conf window's restore of
+    * an absent key: the tokens of a hand-rolled stream start or
+    * lock-and-restore block.
+    */
+  private val StreamStart = Seq("\"checkpointLocation\"", ".trigger(", "conf.unset(")
+
+  test("streams start and session confs are windowed only in StreamJob, each exactly once") {
+    def inStreamJob(f: Path) = f.getFileName.toString == "StreamJob.scala"
+    val hits = for {
+      (f, n, code) <- codeLines if !inStreamJob(f)
+      p <- StreamStart if code.contains(p)
+    } yield s"$f:$n hand-rolls `$p` — start through StreamJob.startStream/drain or use StreamJob.withConf"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val streamJob = codeLines.filter(l => inStreamJob(l._1)).map(_._3)
+    for (p <- StreamStart) assert(streamJob.count(_.contains(p)) == 1, p)
   }
 }

@@ -18,8 +18,8 @@ import graft.pipeline.BatchOrchestrator
 import graft.schema.SchemaProvider
 import graft.streaming.StreamJob
 
-/** The fork-free local file system and the session entries
-  * `StreamJob.start` sets to select it.
+/** The fork-free local file system, the session policy a stream
+  * starts under, and `StreamJob`'s conf window.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -73,14 +73,71 @@ class LocalFsSpec extends SparkSpec {
     conf.set("fs.defaultFS", "hdfs://nn:8020")
     assert(!StreamJob.onLocalFs("ckpt", conf))
 
+    val base = StreamJob.SessionPolicy +: StreamJob.LocalFsPolicy
+    def manager(policy: Seq[(String, String)]): CheckpointFileManager = {
+      val c = new Configuration()
+      policy.foreach { case (k, v) => c.set(k, v) }
+      CheckpointFileManager.create(new Path(tmp()), c)
+    }
+    val local = StreamJob.policy(tmp(), new Configuration())
+    assert(local == base :+ StreamJob.CheckpointManager)
+    assert(manager(local).isInstanceOf[FileSystemBasedCheckpointFileManager])
+    val remote = StreamJob.policy("hdfs://nn:8020/ckpt", new Configuration())
+    assert(remote == base)
+    assert(manager(remote).isInstanceOf[FileContextBasedCheckpointFileManager])
+    assert(StreamJob.policy("ckpt", conf) == base)
+
+    // The policy holds for the query only: the caller's session is as it was.
     val session = spark.newSession()
-    def manager: CheckpointFileManager = CheckpointFileManager.create(new Path(tmp()),
-      session.sessionState.newHadoopConf())
-    StreamJob.configure(session, tmp())
-    assert(manager.isInstanceOf[FileSystemBasedCheckpointFileManager])
-    StreamJob.configure(session, "hdfs://nn:8020/ckpt")
-    assert(session.conf.getOption(StreamJob.CheckpointManager._1).isEmpty)
-    assert(manager.isInstanceOf[FileContextBasedCheckpointFileManager])
+    val keys = (base :+ StreamJob.CheckpointManager).map(_._1)
+    val before = keys.map(session.conf.getOption)
+    val topic = s"${tmp()}/topic"
+    session.range(0, 4).selectExpr("to_json(named_struct('id', id)) AS value").write.text(topic)
+    val orch = new BatchOrchestrator(SchemaProvider.fromDescribeRows(Seq("id" -> "Int64")),
+      PipelineConfig(stringEnumCols = Set.empty),
+      new RecordSink { def write(df: DataFrame): Boolean = df.count() > 0 },
+      new ParquetDlqSink(s"${tmp()}/dlq"), _ => ())
+    val q = StreamJob.start(new FileJsonSource(topic).load(session), orch, s"${tmp()}/checkpoint",
+      Trigger.AvailableNow())
+    assert(keys.map(session.conf.getOption) == before)
+    q.awaitTermination()
+    assert(orch.lastStats.get.validRows.contains(4L))
+  }
+
+  test("a judged drain runs under the policy on RocksDB and records its run") {
+    val topic = tmp()
+    spark.range(0, 100).selectExpr("id", "id % 5 AS g").write.mode("overwrite").parquet(topic)
+    @volatile var batchSession: SparkSession = null
+    StreamJob.drain(spark, "localfs_drain", StreamJob.RocksProvider) {
+      spark.readStream.schema("id LONG, g LONG").parquet(topic).groupBy("g").count()
+        .writeStream.outputMode("update").foreachBatch { (df: DataFrame, _: Long) =>
+          batchSession = df.sparkSession
+          df.foreach(_ => ()) // a stateful batch must run every partition
+        }
+    }
+    val conf = batchSession.sessionState.newHadoopConf()
+    assert(FileSystem.get(URI.create("file:///"), conf).isInstanceOf[PosixLocalFileSystem])
+    assert(CheckpointFileManager.create(new Path(tmp()), conf)
+      .isInstanceOf[FileSystemBasedCheckpointFileManager])
+    assert(batchSession.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(batchSession.conf.get(StreamJob.RocksProvider.head._1) == StreamJob.RocksProvider.head._2)
+    val run = PlanShape.lastStreamRun("localfs_drain").getOrElse(fail("no telemetry recorded"))
+    assert(run.stateRows == 5, run)
+  }
+
+  test("the conf window restores a set key and unsets an absent one when its body throws") {
+    val session = spark.newSession()
+    val (set, absent) = ("spark.sql.shuffle.partitions", "graft.test.absent")
+    session.conf.set(set, "3")
+    val e = intercept[IllegalStateException] {
+      StreamJob.withConf(session, Seq(set -> "9", absent -> "x")) {
+        assert(session.conf.get(set) == "9" && session.conf.get(absent) == "x")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(session.conf.get(set) == "3")
+    assert(session.conf.getOption(absent).isEmpty)
   }
 
   test("a StreamJob batch writes file: through graft's FS and checkpoints through FileSystem") {
