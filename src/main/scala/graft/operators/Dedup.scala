@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.CacheRegistry.TrackedPersist
+import graft.expr.MinHashExpression.minhashHashed
+import graft.expr.ShingleExpression.shingleHashes
+import graft.expr.VectorExpressions.{dot, lshBucketKeys}
 
 import graft.functions.TextFunctions._
 
@@ -16,11 +19,21 @@ import graft.functions.TextFunctions._
   *  - SimHash: one 64-bit fingerprint per doc; near-dups = small
   *    Hamming distance, candidates via fingerprint prefix buckets.
   *  - Embedding cosine: exact threshold join (quadratic, for
-  *    verification) and an LSH (random-hyperplane) bucketed variant
-  *    (the scale path).
+  *    verification) and a banded random-hyperplane LSH variant (the
+  *    scale path).
   *
-  * All candidate-pair joins key on `id_a < id_b` so each pair appears
+  * Both LSH families run one pipeline: a band builder per family
+  * (shingle hashes → MinHash bands, or normalized vectors → hyperplane
+  * sign buckets) into one candidate builder and one verify step. All
+  * candidate-pair joins key on `id_a < id_b` so each pair appears
   * exactly once.
+  *
+  * CALLER RELEASES THE CACHE: the LSH pair functions persist their
+  * band index and payload lazily through [[graft.CacheRegistry]].
+  * After materializing the result, call `CacheRegistry.releaseAll()`
+  * (or clear the session's cache) — long sessions (notebooks,
+  * services) that call them repeatedly without releasing accumulate
+  * cached corpora in the block manager. Bench/Verify release per query.
   */
 object Dedup {
 
@@ -43,22 +56,114 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
       .select("keep_id", "n_copies")
 
-  /** MinHash-LSH candidate pairs with exact-Jaccard re-rank.
+  /** One side of an LSH pair join: the persisted payload per id (its
+    * `value` column — shingle hashes or the normalized vector) and the
+    * persisted (id, band_key) index built from it. `score` names the
+    * verified similarity and `fn` computes it from two payloads.
+    */
+  private final case class Bands(payload: DataFrame, keys: DataFrame,
+      value: String, score: String, fn: (Column, Column) => Column)
+
+  /** (id, hs): the sorted distinct shingle HASHES of each text in one
+    * codegen expression (graft.expr.ShingleHashes). Empty ⟺ fewer than
+    * `shingleSize` tokens.
+    */
+  private def shingled(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int): DataFrame =
+    df.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleSize).as("hs"))
+
+  /** (id, band_key): one row per band of each doc's MinHash signature.
+    * The signature is computed from the hashes directly — MinHashSignature's
+    * own first step is xxhash64 of each shingle string, so MinHashFromHashes
+    * computes the identical signature without materializing the strings.
+    */
+  private def bandKeys(hashed: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    hashed
+      .withColumn("sig", minhashHashed(col("hs"), numHashes))
+      .select(col("id"), explode(lshBandKeys(col("sig"), bands, numHashes / bands)).as("band_key"))
+  }
+
+  /** The text band index. Both frames persist (lazily, so plan-only
+    * callers run no job; MEMORY_AND_DISK spills rather than OOMs):
+    *  - the shingle hashes feed the signature build and both verify
+    *    joins — without the cache each consumer re-tokenizes the corpus
+    *    (the r3 q53 regression). The cache sits BELOW the non-empty
+    *    filter (r13): with the filter inside the cached subtree,
+    *    pushdown inlined shingle_hashes into the filter condition and
+    *    the cache build evaluated it twice per row;
+    *  - the band keys feed every consumer of the candidate builder —
+    *    without the cache each re-runs the MinHash signature over every
+    *    doc (the dominant map CPU); 16 B/row · bands, orders smaller
+    *    than the shingle frame.
+    */
+  private def textBands(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, numHashes: Int, bands: Int): Bands = {
+    val hashed = shingled(df, idCol, textCol, shingleSize).persistTracked()
+      .filter(size(col("hs")) >= 1)
+    Bands(hashed, bandKeys(hashed, numHashes, bands).persistTracked(),
+      "hs", "jaccard", jaccardSortedLongs)
+  }
+
+  /** Candidate pairs (id_a < id_b) from a band index, deduped across
+    * bands BEFORE the verify step, so each pair is scored exactly once
+    * (a pair colliding in k bands would otherwise score k times).
+    * Candidates-first: the band self-join carries ONLY (band_key, id) —
+    * 16 bytes/row, never payloads — which at 100 TB is the difference
+    * between shuffling O(n · bands · |payload|) and O(n · bands · 16)
+    * bytes.
+    *
+    * With `maxBucket`, a bucket of more than `maxBucket` members emits a
+    * STAR to its min-id hub instead of all pairs (see
+    * [[minhashLshPairsBounded]]): one groupBy on the band key (size +
+    * hub) joined back on the same key — an equi-join AQE can
+    * skew-split, never a single-task window buffer.
+    */
+  private def candidates(b: Bands, maxBucket: Option[Int]): DataFrame = {
+    def allPairs(keys: DataFrame) = keys.select(col("band_key"), col("id").as("id_a"))
+      .join(keys.select(col("band_key"), col("id").as("id_b")), Seq("band_key"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+    val cand = maxBucket match {
+      case None => allPairs(b.keys)
+      case Some(cap) =>
+        require(cap >= 2, "maxBucket must allow at least one pair")
+        val stats = b.keys.groupBy("band_key")
+          .agg(count(lit(1)).as("__n"), min(col("id")).as("__hub"))
+        val tagged = b.keys.join(stats, Seq("band_key"))
+        val star = tagged
+          .filter(col("__n") > cap && col("id") =!= col("__hub"))
+          .select(col("__hub").as("id_a"), col("id").as("id_b"))
+        allPairs(tagged.filter(col("__n") <= cap).select(col("band_key"), col("id")))
+          .unionByName(star)
+    }
+    cand.dropDuplicates("id_a", "id_b")
+  }
+
+  /** Scores each candidate pair: attaches each side's payload by two
+    * id-keyed joins of the (small) candidate set, rounds the score to 4
+    * places and keeps pairs at or above `threshold`. The id columns are
+    * the candidate frame's own (id_a, id_b or id_l, id_r).
+    */
+  private def verify(cand: DataFrame, a: Bands, b: Bands, threshold: Double): DataFrame = {
+    val Seq(idA, idB) = cand.columns.toSeq
+    cand
+      .join(a.payload.select(col("id").as(idA), col(a.value).as("__va")), Seq(idA))
+      .join(b.payload.select(col("id").as(idB), col(b.value).as("__vb")), Seq(idB))
+      .select(col(idA), col(idB), round(a.fn(col("__va"), col("__vb")), 4).as(a.score))
+      .filter(col(a.score) >= threshold)
+  }
+
+  /** MinHash-LSH candidate pairs with exact-Jaccard re-rank. Jaccard of
+    * distinct-hash arrays equals Jaccard of the shingle strings absent a
+    * 64-bit collision (~|vocab|²/2⁶⁵ — the same accepted trade as
+    * q49/q106, and one the string-exact oracle would expose at once).
     *
     * @param numHashes signature length (bands * rowsPerBand)
     * @param bands     LSH bands; P(candidate | jaccard=s) =
     *                  1 - (1 - s^rowsPerBand)^bands
     * @param threshold keep pairs with exact shingle-Jaccard >= threshold
     * @return (id_a, id_b, jaccard) one row per near-dup pair
-    *
-    * CALLER RELEASES THE CACHE: the hashed-shingle corpus is lazily
-    * persisted inside (it feeds the signature build plus both re-rank
-    * joins). After materializing the result, drop it with
-    * `spark.catalog.clearCache()` or
-    * `df.sparkSession.sharedState.cacheManager.clearCache()` — long
-    * sessions (notebooks, services) that call this repeatedly without
-    * releasing accumulate cached corpora in the block manager.
-    * Bench/Verify do this between queries.
     */
   def minhashLshPairs(
       df: DataFrame,
@@ -68,69 +173,8 @@ object Dedup {
       numHashes: Int = 32,
       bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-
-    // Fused index build: text → sorted distinct shingle HASHES in one
-    // codegen expression (graft.expr.ShingleHashes), then the signature
-    // from the hashes directly — MinHashSignature's own first step is
-    // xxhash64 of each shingle string, so MinHashFromHashes computes
-    // the identical signature without ever materializing the string
-    // array (the interpreted HOF tower it replaces dominated q23's
-    // profile). Empty hash set ⟺ fewer than shingleSize tokens.
-    // Persisted because it is consumed THREE times (signature build +
-    // both re-rank joins) — without the cache each consumer re-scans
-    // the source and re-tokenizes the full corpus (the r3 q53 bench
-    // regression). Lazy persist (not an eager checkpoint) so callers
-    // that only inspect plans never run a job; MEMORY_AND_DISK spills
-    // rather than OOMs at scale. Registered with CacheRegistry so ANY
-    // caller can release it after its terminal action
-    // (CacheRegistry.releaseAll() — Bench/Verify call it per query).
-    val hashed = df
-      .select(col(idCol).as("id"),
-        graft.expr.ShingleExpression.shingleHashes(col(textCol), shingleSize).as("hs"))
-      // Cache BELOW the non-empty filter (r13): with the filter inside
-      // the cached subtree, pushdown inlined shingle_hashes into the
-      // filter condition and the cache build evaluated the shingle
-      // expression twice per row; filtering ABOVE the cache reads the
-      // materialized array's size instead. Same rows downstream.
-      .persistTracked()
-      .filter(size(col("hs")) >= 1)
-    val sigs = hashed
-      .withColumn("sig", graft.expr.MinHashExpression.minhashHashed(col("hs"), numHashes))
-      .withColumn("band_key", explode(lshBandKeys(col("sig"), bands, rowsPerBand)))
-
-    // Candidates-first: the band self-join carries ONLY (band_key, id)
-    // — 16 bytes/row — never the shingle arrays, and each candidate
-    // pair is deduped BEFORE the exact-Jaccard re-rank, so Jaccard runs
-    // exactly once per pair (a pair colliding in k bands would
-    // otherwise re-rank k times). The shingle arrays are then attached
-    // by two id-keyed joins of the (small) candidate set back to the
-    // doc shingles. At 100 TB this is the difference between shuffling
-    // O(n · bands · |shingles|) bytes and O(n · bands · 16) bytes.
-    // PERSISTED (r13 optimization): both self-join sides consume this
-    // frame, and without the cache each side re-runs the 32-hash
-    // MinHash signature over every doc's shingle set (the dominant
-    // map CPU) — the cache is 16 B/row · bands, orders smaller than
-    // the shingle frame it derives from, so at any scale caching the
-    // banded ids is strictly cheaper than recomputing signatures.
-    val bandedIds = sigs.select(col("band_key"), col("id")).persistTracked()
-    val cand = bandedIds.select(col("band_key"), col("id").as("id_a"))
-      .join(bandedIds.select(col("band_key"), col("id").as("id_b")), Seq("band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-
-    // Exact re-rank over the hashed sets: Jaccard of distinct-hash
-    // arrays equals Jaccard of the shingle strings absent a 64-bit
-    // collision (~|vocab|²/2⁶⁵ — the same accepted trade as q49/q106,
-    // and one the string-exact oracle would expose immediately).
-    cand
-      .join(hashed.select(col("id").as("id_a"), col("hs").as("sh_a")), Seq("id_a"))
-      .join(hashed.select(col("id").as("id_b"), col("hs").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(jaccardSortedLongs(col("sh_a"), col("sh_b")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val b = textBands(df, idCol, textCol, shingleSize, numHashes, bands)
+    verify(candidates(b, None), b, b, threshold)
   }
 
   /** MinHash-LSH near-dup pairs with a BOUNDED per-band bucket — the
@@ -157,12 +201,6 @@ object Dedup {
     *    -style bucket cap). On exact-duplicate clusters the output is
     *    exactly {(min_id, other) | other ∈ cluster}, which is what the
     *    q370 oracle pins in SQL.
-    *
-    * Cost shape: one extra groupBy on the 8-byte band key (bucket
-    * size + hub) joined back on the same key — both stages carry
-    * 16-24 B rows, never shingles; the giant-bucket join is an
-    * equi-join AQE can skew-split, never a single-task window buffer.
-    * Caller releases the cache ([[minhashLshPairs]] contract).
     */
   def minhashLshPairsBounded(
       df: DataFrame,
@@ -173,48 +211,8 @@ object Dedup {
       bands: Int = 8,
       threshold: Double = 0.5,
       maxBucket: Int = 64): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    require(maxBucket >= 2, "maxBucket must allow at least one pair")
-    val rowsPerBand = numHashes / bands
-    val hashed = df
-      .select(col(idCol).as("id"),
-        graft.expr.ShingleExpression.shingleHashes(col(textCol), shingleSize).as("hs"))
-      // Cache BELOW the non-empty filter (r13): with the filter inside
-      // the cached subtree, pushdown inlined shingle_hashes into the
-      // filter condition and the cache build evaluated the shingle
-      // expression twice per row; filtering ABOVE the cache reads the
-      // materialized array's size instead. Same rows downstream.
-      .persistTracked()
-      .filter(size(col("hs")) >= 1)
-    // PERSISTED (r13 optimization): consumed FOUR times (bucket stats,
-    // the stats tag-back join, and both sides of the small-bucket
-    // self-join) — without the cache each consumer re-runs the 32-hash
-    // MinHash signature over the cached shingle sets. 16 B/row · bands.
-    val bandedIds = hashed
-      .withColumn("sig", graft.expr.MinHashExpression.minhashHashed(col("hs"), numHashes))
-      .select(col("id"),
-        explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("band_key"))
-      .persistTracked()
-    val stats = bandedIds.groupBy("band_key")
-      .agg(count(lit(1)).as("__n"), min(col("id")).as("__hub"))
-    val tagged = bandedIds.join(stats, Seq("band_key"))
-    val small = tagged.filter(col("__n") <= maxBucket)
-      .select(col("band_key"), col("id"))
-    val smallPairs = small.select(col("band_key"), col("id").as("id_a"))
-      .join(small.select(col("band_key"), col("id").as("id_b")), Seq("band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val starPairs = tagged
-      .filter(col("__n") > maxBucket && col("id") =!= col("__hub"))
-      .select(col("__hub").as("id_a"), col("id").as("id_b"))
-    val cand = smallPairs.unionByName(starPairs)
-      .dropDuplicates("id_a", "id_b")
-    cand
-      .join(hashed.select(col("id").as("id_a"), col("hs").as("sh_a")), Seq("id_a"))
-      .join(hashed.select(col("id").as("id_b"), col("hs").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(jaccardSortedLongs(col("sh_a"), col("sh_b")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val b = textBands(df, idCol, textCol, shingleSize, numHashes, bands)
+    verify(candidates(b, Some(maxBucket)), b, b, threshold)
   }
 
   /** Per-band bucket-size accounting for the LSH stress/telemetry
@@ -225,7 +223,7 @@ object Dedup {
     * n−1). This is the "measure, don't guess" frame the round-13
     * adversarial rehearsal records — quadratic blowup shows up here
     * as the unbounded column exploding while the bounded one stays
-    * linear in cluster size.
+    * linear in cluster size. Reads the band keys unpersisted: one pass.
     */
   def lshBucketStats(
       df: DataFrame,
@@ -234,14 +232,9 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 32,
       bands: Int = 8,
-      maxBucket: Int = 64): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    df.select(col(idCol).as("id"),
-        graft.expr.ShingleExpression.shingleHashes(col(textCol), shingleSize).as("hs"))
-      .filter(size(col("hs")) >= 1)
-      .withColumn("sig", graft.expr.MinHashExpression.minhashHashed(col("hs"), numHashes))
-      .select(explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("band_key"))
+      maxBucket: Int = 64): DataFrame =
+    bandKeys(shingled(df, idCol, textCol, shingleSize).filter(size(col("hs")) >= 1),
+        numHashes, bands)
       .groupBy("band_key").agg(count(lit(1)).as("n"))
       .groupBy("n").agg(
         count(lit(1)).as("n_buckets"),
@@ -249,18 +242,15 @@ object Dedup {
         sum(when(col("n") <= maxBucket, col("n") * (col("n") - 1) / 2)
           .otherwise(col("n") - 1)).as("bounded_pairs"))
       .orderBy(col("n"))
-  }
 
   /** Cross-corpus MinHash-LSH pairs: LEFT (e.g. a benchmark/eval set)
     * against RIGHT (the training corpus) — the decontamination join
     * (Dolma/RefinedWeb-style): which right-side docs near-duplicate
-    * ANY left-side doc. Identical banding/candidates-first discipline
-    * to [[minhashLshPairs]], but the band join is ASYMMETRIC — left
-    * bands join right bands only, so candidate count scales with
-    * |left|·collisions, never |right|² (the self-join would spend
-    * almost all its work on right×right pairs this caller discards).
-    * Both sides' hashed-shingle frames persist for the re-rank joins;
-    * CALLER RELEASES THE CACHE (the [[minhashLshPairs]] contract).
+    * ANY left-side doc. Each side is a [[minhashLshPairs]] band index,
+    * but the band join is ASYMMETRIC — left bands join right bands
+    * only, so candidate count scales with |left|·collisions, never
+    * |right|² (the self-join would spend almost all its work on
+    * right×right pairs this caller discards).
     *
     * @return (id_l, id_r, jaccard) — one row per cross pair at or
     *         above the threshold
@@ -274,39 +264,13 @@ object Dedup {
       numHashes: Int = 32,
       bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    def prep(df: DataFrame): (DataFrame, DataFrame) = {
-      val hashed = df
-        .select(col(idCol).as("id"),
-          graft.expr.ShingleExpression.shingleHashes(col(textCol), shingleSize).as("hs"))
-        // Cache below the filter — same single-evaluation rationale as
-        // minhashLshPairs (r13).
-        .persistTracked()
-        .filter(size(col("hs")) >= 1)
-      // Persisted like minhashLshPairs' bandedIds: the asymmetric band
-      // join consumes each side once, but candidates re-derive from the
-      // banded frame only through the cache (16 B/row · bands), never a
-      // second signature pass.
-      val banded = hashed
-        .withColumn("sig", graft.expr.MinHashExpression.minhashHashed(col("hs"), numHashes))
-        .select(col("id"),
-          explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("band_key"))
-        .persistTracked()
-      (hashed, banded)
-    }
-    val (hashedL, bandedL) = prep(left)
-    val (hashedR, bandedR) = prep(right)
-    val cand = bandedL.select(col("band_key"), col("id").as("id_l"))
-      .join(bandedR.select(col("band_key"), col("id").as("id_r")), Seq("band_key"))
+    val l = textBands(left, idCol, textCol, shingleSize, numHashes, bands)
+    val r = textBands(right, idCol, textCol, shingleSize, numHashes, bands)
+    val cand = l.keys.select(col("band_key"), col("id").as("id_l"))
+      .join(r.keys.select(col("band_key"), col("id").as("id_r")), Seq("band_key"))
       .select("id_l", "id_r")
       .dropDuplicates("id_l", "id_r")
-    cand
-      .join(hashedL.select(col("id").as("id_l"), col("hs").as("sh_l")), Seq("id_l"))
-      .join(hashedR.select(col("id").as("id_r"), col("hs").as("sh_r")), Seq("id_r"))
-      .select(col("id_l"), col("id_r"),
-        round(jaccardSortedLongs(col("sh_l"), col("sh_r")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verify(cand, l, r, threshold)
   }
 
   /** SimHash near-dup pairs: candidates share one of four 16-bit
@@ -334,31 +298,22 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
-
-  /** Native codegen'd dot product (graft.expr.DotProduct) — the
-    * interpreted `aggregate(zip_with(...))` form dominated the bench
-    * on quadratic pair joins.
-    */
-  private def dot(a: Column, b: Column): Column =
-    graft.expr.VectorExpressions.dot(a, b)
-
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  /** Exact embedding near-dup pairs: all pairs with cosine >= threshold.
-    * Quadratic — the verification baseline. Pre-normalizes each vector
-    * once (O(n·d)) so the pair stage is a single dot product.
-    */
   /** Pre-normalized vectors: the norm is computed in its OWN projection
     * step so CollapseProject won't inline the O(d) dot product into
     * every element's division (which would make normalization O(d²)).
     */
   private def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+    df.select(col(idCol).as("id"), transform(col(vecCol), x => x.cast("double")).as("v"))
       .select(col("id"), col("v"), sqrt(dot(col("v"), col("v"))).as("norm"))
       .select(col("id"), transform(col("v"), x => x / col("norm")).as("nv"))
 
+  /** Exact embedding near-dup pairs: all pairs with cosine >= threshold.
+    * Quadratic — the verification baseline. Pre-normalizes each vector
+    * once (O(n·d)) so the pair stage is a single dot product.
+    */
   def embeddingPairsExact(
       df: DataFrame,
       idCol: String,
@@ -422,78 +377,39 @@ object Dedup {
         col("cosine"))
   }
 
-  /** Random-hyperplane LSH buckets for embeddings (Charikar): sign bits
-    * of `numPlanes` fixed pseudo-random hyperplanes, packed into one
-    * long bucket id. Pr[same bit] = 1 - angle/π. Deterministic planes
-    * derived from xxhash64(plane, dim) — no RNG state to ship.
-    */
-  def embeddingLshBucket(vecCol: Column, dim: Int, numPlanes: Int,
-      planeSeed: Int = 0): Column = {
-    val planes: Seq[Column] = (0 until numPlanes).map { p =>
-      // plane vector component j = signed hash in [-1, 1]
-      val proj = aggregate(
-        zip_with(asDouble(vecCol), sequence(lit(0), lit(dim - 1)),
-          (x, j) => x * (pmod(xxhash64(lit((planeSeed + p).toLong), j), lit(2000001L)).cast("double") / lit(1000000.0) - lit(1.0))),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    planes.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** LSH-bucketed embedding near-dup: exact cosine only within buckets.
-    * The scale path — shuffle keys are single longs; recall is tunable
-    * via numPlanes (fewer planes → bigger buckets → higher recall).
-    */
-  def embeddingPairsLsh(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double,
-      numPlanes: Int = 8): DataFrame = {
-    val bucketed = normalized(df, idCol, vecCol)
-      .select(col("id"), col("nv"),
-        embeddingLshBucket(col("nv"), dim, numPlanes).as("bucket"))
-    val a = bucketed.select(col("bucket"), col("id").as("id_a"), col("nv").as("nv_a"))
-    val b = bucketed.select(col("bucket"), col("id").as("id_b"), col("nv").as("nv_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(dot(col("nv_a"), col("nv_b")), 4))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-  }
-
   /** tables×numPlanes hyperplanes, each component uniform in [-1, 1]:
     * a deterministic pure function of (plane, dim-index) through the
     * shared splitmix64 finalizer ([[graft.expr.Splitmix]]) — no RNG
-    * state to ship, the matrix rebuilds identically on every driver
-    * (the [[embeddingLshBucket]] xxhash64 trick, computed driver-side
-    * once instead of per row).
+    * state to ship, the matrix rebuilds identically on every driver.
     */
   private def planeMatrix(dim: Int, numPlanes: Int, tables: Int): Array[Array[Double]] =
-    Array.tabulate(tables * numPlanes) { p =>
-      Array.tabulate(dim) { j =>
-        val m = java.lang.Math.floorMod(
-          graft.expr.Splitmix.mix64(p * 1000003L + j), 2000001L)
-        m.toDouble / 1000000.0 - 1.0
-      }
+    Array.tabulate(tables * numPlanes, dim) { (p, j) =>
+      Math.floorMod(graft.expr.Splitmix.mix64(p * 1000003L + j), 2000001L) / 1000000.0 - 1.0
     }
 
-  /** BANDED multi-table hyperplane LSH near-dup pairs — the
-    * recall-amplified form of [[embeddingPairsLsh]] (the OR-of-ANDs
-    * construction [[minhashLshPairs]] uses for MinHash, applied to
-    * Charikar sign-bit buckets): `tables` independent plane sets, a
-    * pair is a candidate if it collides in ANY table, so recall for a
-    * pair at angle θ is 1 − (1 − (1 − θ/π)^numPlanes)^tables — near-dup
-    * pairs (cosine ≳ 0.98, per-table collision ~0.64 at 8 planes)
-    * survive with miss probability ~1e-11 at 24 tables while
+  /** The vector band index: the normalized vectors persist for the
+    * verify joins, the (id, band_key) index persists for the candidate
+    * builder (16 B/row · tables, replacing a second numPlanes·tables
+    * hyperplane-projection pass over every vector).
+    */
+  private def vectorBands(df: DataFrame, idCol: String, vecCol: String,
+      dim: Int, numPlanes: Int, tables: Int): Bands = {
+    require(numPlanes < 56, "table index must fit above the plane bits")
+    val normed = normalized(df, idCol, vecCol).persistTracked()
+    val keys = lshBucketKeys(col("nv"), planeMatrix(dim, numPlanes, tables), numPlanes, tables)
+    Bands(normed, normed.select(col("id"), explode(keys).as("band_key")).persistTracked(),
+      "nv", "cosine", dot)
+  }
+
+  /** BANDED multi-table hyperplane LSH near-dup pairs (Charikar sign
+    * bits, the OR-of-ANDs construction [[minhashLshPairs]] uses for
+    * MinHash): `tables` independent plane sets of `numPlanes` sign bits
+    * each, a pair is a candidate if it collides in ANY table, so recall
+    * for a pair at angle θ is 1 − (1 − (1 − θ/π)^numPlanes)^tables —
+    * near-dup pairs (cosine ≳ 0.98, per-table collision ~0.64 at 8
+    * planes) survive with miss probability ~1e-11 at 24 tables while
     * background near-orthogonal pairs stay spread across 2^numPlanes
-    * buckets per table. Candidates-first discipline: the per-table
-    * bucket self-join carries ONLY (bucket, id) — 16 bytes/row, never
-    * the vectors — and pairs are deduped across tables BEFORE the
-    * exact-cosine re-rank, so each candidate pair ranks exactly once.
-    * The normalized frame persists for the two id-keyed re-rank
-    * joins; caller releases the cache ([[minhashLshPairs]] contract).
+    * buckets per table. Verified by exact cosine.
     */
   def embeddingPairsLshBanded(
       df: DataFrame,
@@ -503,39 +419,18 @@ object Dedup {
       threshold: Double,
       numPlanes: Int = 8,
       tables: Int = 24): DataFrame = {
-    require(numPlanes < 56, "table index must fit above the plane bits")
-    val normed = normalized(df, idCol, vecCol).persistTracked()
-    val keys = graft.expr.VectorExpressions.lshBucketKeys(
-      col("nv"), planeMatrix(dim, numPlanes, tables), numPlanes, tables)
-    // Persisted (r13): both self-join sides consume this frame; the
-    // cache (16 B/row · tables) replaces a second numPlanes·tables
-    // hyperplane-projection pass over every vector.
-    val banded = normed.select(col("id"), explode(keys).as("bucket"))
-      .persistTracked()
-    val cand = banded.select(col("bucket"), col("id").as("id_a"))
-      .join(banded.select(col("bucket"), col("id").as("id_b")), Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    cand
-      .join(normed.select(col("id").as("id_a"), col("nv").as("nv_a")), Seq("id_a"))
-      .join(normed.select(col("id").as("id_b"), col("nv").as("nv_b")), Seq("id_b"))
-      .withColumn("cosine", round(dot(col("nv_a"), col("nv_b")), 4))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    val b = vectorBands(df, idCol, vecCol, dim, numPlanes, tables)
+    verify(candidates(b, None), b, b, threshold)
   }
 
-  /** [[embeddingPairsLshBanded]] with the BOUNDED per-bucket guard
-    * (the round-13 adversarial-duplication rule, mirroring
-    * [[minhashLshPairsBounded]]): a hyperplane bucket with more than
+  /** [[embeddingPairsLshBanded]] with the BOUNDED per-bucket guard of
+    * [[minhashLshPairsBounded]]: a hyperplane bucket with more than
     * `maxBucket` members — which at 100 TB means an embedding-level
     * duplicate flood, e.g. the same boilerplate page embedded millions
-    * of times — emits a STAR to its min-id hub instead of all pairs,
-    * so per-bucket emission is O(n) while connectivity (what SemDeDup
-    * -style cluster dedup consumes downstream) is preserved. Same
-    * candidates-first discipline; same recall trade as the text form
-    * (pairs colliding ONLY in overflowed buckets reduce to hub
-    * pairs). Caller releases the cache.
+    * of times — emits a STAR instead of all pairs, so per-bucket
+    * emission is O(n) while connectivity (what SemDeDup-style cluster
+    * dedup consumes downstream) is preserved. Same recall trade as the
+    * text form.
     */
   def embeddingPairsLshBandedBounded(
       df: DataFrame,
@@ -546,35 +441,8 @@ object Dedup {
       numPlanes: Int = 8,
       tables: Int = 24,
       maxBucket: Int = 64): DataFrame = {
-    require(numPlanes < 56, "table index must fit above the plane bits")
-    require(maxBucket >= 2, "maxBucket must allow at least one pair")
-    val normed = normalized(df, idCol, vecCol).persistTracked()
-    val keys = graft.expr.VectorExpressions.lshBucketKeys(
-      col("nv"), planeMatrix(dim, numPlanes, tables), numPlanes, tables)
-    // Persisted (r13): consumed four times (stats, tag-back, both
-    // self-join sides) — same rationale as minhashLshPairsBounded.
-    val banded = normed.select(col("id"), explode(keys).as("bucket"))
-      .persistTracked()
-    val stats = banded.groupBy("bucket")
-      .agg(count(lit(1)).as("__n"), min(col("id")).as("__hub"))
-    val tagged = banded.join(stats, Seq("bucket"))
-    val small = tagged.filter(col("__n") <= maxBucket)
-      .select(col("bucket"), col("id"))
-    val smallPairs = small.select(col("bucket"), col("id").as("id_a"))
-      .join(small.select(col("bucket"), col("id").as("id_b")), Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val starPairs = tagged
-      .filter(col("__n") > maxBucket && col("id") =!= col("__hub"))
-      .select(col("__hub").as("id_a"), col("id").as("id_b"))
-    val cand = smallPairs.unionByName(starPairs)
-      .dropDuplicates("id_a", "id_b")
-    cand
-      .join(normed.select(col("id").as("id_a"), col("nv").as("nv_a")), Seq("id_a"))
-      .join(normed.select(col("id").as("id_b"), col("nv").as("nv_b")), Seq("id_b"))
-      .withColumn("cosine", round(dot(col("nv_a"), col("nv_b")), 4))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    val b = vectorBands(df, idCol, vecCol, dim, numPlanes, tables)
+    verify(candidates(b, Some(maxBucket)), b, b, threshold)
   }
 
   /** Brute-force cosine top-k neighbors of one probe vector (the exact

@@ -124,4 +124,32 @@ class AdversarialDedupSpec extends SparkSpec {
     assert(b2.toDouble / b1 < 6.0, s"bounded should grow ~4x, got $b1 -> $b2")
     spark.catalog.clearCache()
   }
+
+  test("emission rules agree: bounded above every bucket size and the cross join equal the self-join") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val docs = spark.read.parquet(s"${sf("sf0.01")}/documents.parquet").select("doc_id", "text")
+    val cap = docs.count().toInt + 1
+    val self = rows(Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 16))
+    assert(self.nonEmpty, "fixture must produce pairs or the differential is vacuous")
+    assert(rows(Dedup.minhashLshPairsBounded(docs, "doc_id", "text", bands = 16,
+      maxBucket = cap)) == self)
+    assert(rows(Dedup.minhashLshPairsCross(docs, docs, "doc_id", "text", bands = 16)
+      .filter(col("id_l") < col("id_r"))) == self)
+    // Vectors: q26's planted twins over the first 300 fixture embeddings.
+    val base = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
+      .filter(col("vec_id") < 300)
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
+    val twins = base.select((col("vec_id") + 100000).as("vec_id"),
+      zip_with(col("v"), sequence(lit(0), lit(63)), (x, j) =>
+        x + lit(0.015) * ((col("vec_id") * 31 + j.cast("long") * 7) % 5 - 2)
+          .cast("double")).as("v"))
+    val vecs = base.unionByName(twins)
+    val banded = rows(Dedup.embeddingPairsLshBanded(vecs, "vec_id", "v", dim = 64,
+      threshold = 0.95))
+    assert(banded.nonEmpty, "construction must plant near-dup pairs")
+    assert(rows(Dedup.embeddingPairsLshBandedBounded(vecs, "vec_id", "v", dim = 64,
+      threshold = 0.95, maxBucket = 601)) == banded)
+    spark.catalog.clearCache()
+  }
 }

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the session builder and the cache-hygiene sequence in
-  * [[Harness]], and stream starts and session conf windows in
-  * `StreamJob`: a new tool under src/main/scala that pastes one
-  * instead of calling them fails here.
+  * [[Harness]], stream starts and session conf windows in `StreamJob`,
+  * and the LSH band-key expressions in `Dedup`'s band builders: a new
+  * tool under src/main/scala that pastes one instead of calling them
+  * fails here.
   */
 class HarnessGuardSpec extends AnyFunSuite {
 
@@ -59,5 +60,20 @@ class HarnessGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
     val streamJob = codeLines.filter(l => inStreamJob(l._1)).map(_._3)
     for (p <- StreamStart) assert(streamJob.count(_.contains(p)) == 1, p)
+  }
+
+  /** Each LSH band-key expression, by the file that defines it: a
+    * second call site is a second hand-built band index.
+    */
+  private val BandKeys = Seq("minhashHashed(" -> "MinHashExpression.scala",
+    "lshBandKeys(" -> "TextFunctions.scala", "lshBucketKeys(" -> "VectorExpressions.scala")
+
+  test("each LSH band-key expression is built on exactly one code line") {
+    for ((p, home) <- BandKeys) {
+      val sites = codeLines.filter(l => l._1.getFileName.toString != home && l._3.contains(p))
+      assert(sites.size == 1,
+        s"`$p` on ${sites.size} lines, expected one band builder:\n" +
+          sites.map(l => s"${l._1}:${l._2}").mkString("\n"))
+    }
   }
 }

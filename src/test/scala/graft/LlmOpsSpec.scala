@@ -96,9 +96,10 @@ class LlmOpsSpec extends SparkSpec {
     val exact = Dedup.embeddingPairsExact(emb, "vec_id", "embedding", 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact == Set((0L, 1L), (2L, 3L), (4L, 5L)))
-    val lsh = Dedup.embeddingPairsLsh(emb, "vec_id", "embedding", dim, 0.999, numPlanes = 4)
+    val lsh = Dedup.embeddingPairsLshBanded(emb, "vec_id", "embedding", dim, 0.999, numPlanes = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == exact, "near-identical vectors share all hyperplane signs → full recall")
+    spark.catalog.clearCache()
   }
 
   test("blocked exact pairs ≡ naive crossJoin exact pairs (the q25 bench form)") {
