@@ -114,10 +114,15 @@ object Dedup {
     * bytes.
     *
     * With `maxBucket`, a bucket of more than `maxBucket` members emits a
-    * STAR to its min-id hub instead of all pairs (see
-    * [[minhashLshPairsBounded]]): one groupBy on the band key (size +
-    * hub) joined back on the same key — an equi-join AQE can
-    * skew-split, never a single-task window buffer.
+    * STAR (semantics: [[minhashLshPairsBounded]]): each member pairs
+    * with the smallest id of its exact-content class (`xxhash64` of the
+    * payload), each class's smallest id with the bucket's min-id hub.
+    * Equal payloads have equal band keys, so a class sits whole in
+    * every bucket holding one of its members and its smallest id is
+    * found once per corpus. Cost: one groupBy on the band key (size +
+    * hub) and one on the content hash (class min), each joined back on
+    * its key — equi-joins AQE can skew-split, never a single-task
+    * window buffer.
     */
   private def candidates(b: Bands, maxBucket: Option[Int]): DataFrame = {
     def allPairs(keys: DataFrame) = keys.select(col("band_key"), col("id").as("id_a"))
@@ -131,9 +136,13 @@ object Dedup {
         val stats = b.keys.groupBy("band_key")
           .agg(count(lit(1)).as("__n"), min(col("id")).as("__hub"))
         val tagged = b.keys.join(stats, Seq("band_key"))
-        val star = tagged
-          .filter(col("__n") > cap && col("id") =!= col("__hub"))
-          .select(col("__hub").as("id_a"), col("id").as("id_b"))
+        val content = b.payload.select(col("id"), xxhash64(col(b.value)).as("__c"))
+        val firsts = content
+          .join(content.groupBy("__c").agg(min(col("id")).as("__first")), Seq("__c"))
+        val star = tagged.filter(col("__n") > cap).join(firsts, Seq("id"))
+          .select(when(col("id") === col("__first"), col("__hub"))
+            .otherwise(col("__first")).as("id_a"), col("id").as("id_b"))
+          .filter(col("id_a") =!= col("id_b"))
         allPairs(tagged.filter(col("__n") <= cap).select(col("band_key"), col("id")))
           .unionByName(star)
     }
@@ -185,22 +194,25 @@ object Dedup {
     * boilerplate floods) puts the WHOLE cluster in one bucket per
     * band, and candidate pairs go quadratic in cluster size — the
     * classic LSH failure mode at 100 TB. Guard: buckets with more than
-    * `maxBucket` members switch from all-pairs to a STAR — every
-    * member pairs with the bucket's min-id hub only — so per-bucket
-    * emission drops from O(n²) to O(n) while CONNECTIVITY within the
-    * bucket is fully preserved (all members reach each other through
-    * the hub), which is the property the downstream
-    * connected-components dedup (q158's pipeline) actually consumes.
+    * `maxBucket` members switch from all-pairs to a STAR in two steps —
+    * each member pairs with the smallest id of its exact-content class
+    * (same shingle-hash set), and each class's smallest id pairs with
+    * the bucket's min-id hub — so per-bucket emission drops from O(n²)
+    * to n−1 while CONNECTIVITY within the bucket is preserved (all
+    * members reach each other through the hub), which is the property
+    * the downstream connected-components dedup (q158's pipeline)
+    * actually consumes.
     *
     * Semantics vs the unbounded form:
-    *  - component structure over TRUE near-dup clusters is unchanged
-    *    (an exact/near-dup cluster's bucket hub IS a near-dup of every
-    *    member, so hub edges survive the Jaccard verify);
-    *  - pair-level recall for pairs that collide ONLY in overflowed
-    *    buckets is reduced to hub pairs (documented trade — the FAISS
-    *    -style bucket cap). On exact-duplicate clusters the output is
-    *    exactly {(min_id, other) | other ∈ cluster}, which is what the
-    *    q370 oracle pins in SQL.
+    *  - an exact-duplicate cluster's output is exactly
+    *    {(min_id, other) | other ∈ cluster} in every overflowed bucket,
+    *    whatever the hub is — even a near-dup sharing all bands, whose
+    *    hub edges fail a threshold of 1.0 — which is what the q370
+    *    oracle pins in SQL;
+    *  - pair-level recall for non-identical pairs that collide ONLY in
+    *    overflowed buckets is reduced to class-to-hub pairs (documented
+    *    trade — the FAISS-style bucket cap); connectivity through the
+    *    hub survives wherever the verify keeps the hub edges.
     */
   def minhashLshPairsBounded(
       df: DataFrame,

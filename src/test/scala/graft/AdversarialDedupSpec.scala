@@ -125,6 +125,30 @@ class AdversarialDedupSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("bounded LSH: an exact-dup cluster whose bucket hub is only a near-dup keeps its pairs") {
+    // Doc 1 is `base`; docs 10..29 are 20 copies of `base + " dup"` —
+    // one extra shingle, so Jaccard < 1 to doc 1 yet (checked below)
+    // the same 8 band keys. Every bucket of the cluster has 21 members
+    // > 8 with doc 1 as its min-id hub, and a star to doc 1 alone
+    // would lose every threshold-1.0 pair of the copies.
+    val base = (0 until 20).map(k => salad(500 + k)).mkString(" ")
+    val planted = (1L, base) +: (10L until 30L).map(id => (id, base + " dup"))
+    val df = planted.toDF("doc_id", "text").unionByName(adversarial(0, 0, 30))
+    val keys = Seq(base, base + " dup").toDF("text")
+      .select(graft.functions.TextFunctions.lshBandKeys(
+        graft.expr.MinHashExpression.minhashHashed(
+          graft.expr.ShingleExpression.shingleHashes(col("text"), 3), 32), 8, 4))
+      .collect().map(_.getSeq[Long](0))
+    assert(keys(0) == keys(1), "precondition: the near-dup shares all 8 band keys")
+    val pairs = Dedup.minhashLshPairsBounded(df, "doc_id", "text",
+      threshold = 1.0, maxBucket = 8).collect()
+    assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      (11L until 30L).map(10L -> _).toSet,
+      "the copies must star to their own class's min id, not to the near-dup hub")
+    assert(pairs.forall(_.getDouble(2) == 1.0))
+    spark.catalog.clearCache()
+  }
+
   test("emission rules agree: bounded above every bucket size and the cross join equal the self-join") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
