@@ -64,7 +64,7 @@ object SemanticDedup {
     // caller's action runs the self-join; release after the plan is
     // assembled is unsafe (lazy consumers), so the persist is
     // registered with CacheRegistry — the caller releases it after
-    // its terminal action, exactly as Dedup.minhashLshPairs documents.
+    // its terminal action, exactly as Dedup's scaladoc documents.
     out
   }
 
