@@ -733,9 +733,7 @@ private[graft] trait QueriesIo { this: Queries.type =>
     // the returned frame's plan is the pruned READ, which is the part
     // under judgment.
     val idx = scratch("graft_inv_index")
-    tWide(s, dir, "documents")
-      .select(col("doc_id"), explode(graft.functions.TextFunctions.tokens(col("text"))).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+    tokenCounts(s, dir, "term", "tf", "doc_id")
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(64)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(idx)
     val probe = "data"

@@ -148,13 +148,21 @@ private[graft] trait QueriesShared { this: Queries.type =>
     */
   private[graft] def wordCountStaged(s: SparkSession, dir: String): DataFrame = {
     val staged = stagedParquet(s"wc|$dir") { out =>
-      tWide(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(out)
+      tokenCounts(s, dir, "word", "n").write.mode("overwrite").parquet(out)
     }
     s.read.parquet(staged)
   }
+
+  /** Token occurrence counts over the corpus: `documents` tokenized
+    * with the fused tokenizer, exploded, and counted per (keys…,
+    * token) in one map-side-combined aggregation — (keys…, `token`,
+    * `n`). Docs with no tokens contribute no rows.
+    */
+  private[graft] def tokenCounts(s: SparkSession, dir: String,
+      token: String, n: String, keys: String*): DataFrame =
+    tWide(s, dir, "documents")
+      .select(keys.map(col) :+ explode(TextFunctions.tokens(col("text"))).as(token): _*)
+      .groupBy((keys :+ token).map(col): _*).agg(count(lit(1)).as(n))
 
   /** The first-k BPE merges learned on [[wordCountStaged]] — the
     * trained tokenizer model, STAGED per dataset dir (r14). A

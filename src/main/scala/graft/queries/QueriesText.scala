@@ -22,10 +22,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     * words (map-side combine), top-k is TakeOrderedAndProject.
     */
   def q07_text_wordcount(s: SparkSession, dir: String): DataFrame =
-    tWide(s, dir, "documents")
-      .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
+    tokenCounts(s, dir, "word", "cnt")
       .orderBy(col("cnt").desc, col("word").asc)
       .limit(20)
 
@@ -121,9 +118,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     * corpus coverage of that vocab. One wordcount shuffle feeds both.
     */
   def q48_vocab(s: SparkSession, dir: String): DataFrame = {
-    val counts = tWide(s, dir, "documents")
-      .select(explode(TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    val counts = tokenCounts(s, dir, "word", "cnt")
     val vocab = counts.orderBy(col("cnt").desc, col("word").asc).limit(20)
     vocab.agg(count(lit(1)).as("n_vocab"), sum("cnt").as("covered_tokens"))
       .crossJoin(counts.agg(sum("cnt").as("total_tokens")))
@@ -421,9 +416,7 @@ private[graft] trait QueriesText { this: Queries.type =>
       ("(ies|ied)$", "i"), ("sses$", "ss"), ("([^su])s$", "$1"),
       ("^(.{4,})ing$", "$1"), ("^(.{3,})ed$", "$1"))
       .foldLeft(tok) { case (c, (p, r)) => regexp_replace(c, p, r) }
-    tWide(s, dir, "documents")
-      .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c"))
+    tokenCounts(s, dir, "tok", "c")
       .select(stem.as("stem"), col("c"))
       .persistTracked()
       .filter(length(col("stem")) >= 3 && !col("stem").isin(stop: _*))
@@ -593,9 +586,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def q170_zipf_slope(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.PrefixSum
-    val counts = tWide(s, dir, "documents")
-      .select(explode(TextFunctions.tokens(col("text"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
+    val counts = tokenCounts(s, dir, "w", "c")
     val ranked = PrefixSum.globalRank(
       counts.select(col("w"), col("c"), (-col("c")).as("negc")), Seq("negc", "w"), "r")
     val vocab = counts.agg(count(lit(1)).as("n_vocab"))
@@ -703,10 +694,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // total), and nu = Σ cw over uni is the occurrence total exactly
     // (long arithmetic — bit-identical to counting the explode).
     // The explode now runs once, into the unigram aggregation.
-    val uni = tWide(s, dir, "documents")
-      .select(explode(TextFunctions.tokens(col("text"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cw"))
-      .persistTracked()
+    val uni = tokenCounts(s, dir, "w", "cw").persistTracked()
     val nu = uni.agg(sum("cw").as("nu")) // 1-row broadcast
     // Persist the AGGREGATED counts (|vocab²| rows, small), not the
     // explode: bi feeds both the PMI branch and the nb total — without
@@ -947,9 +935,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // with zero tokens produce no explode rows — exactly the rows the
     // old size(ws) > 0 filter dropped. Casts mirror the old column
     // types (size/int, aggregate/long).
-    val base = tWide(s, dir, "documents")
-      .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
+    val base = tokenCounts(s, dir, "w", "c", "doc_id")
       .groupBy("doc_id").agg(
         sum("c").cast("int").as("n_words"),
         sum(length(col("w")).cast("long") * col("c")).as("sum_len"),
@@ -984,10 +970,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     * aggregates of already-aggregated frames, never corpus re-scans.
     */
   def q203_kl_divergence(s: SparkSession, dir: String): DataFrame = {
-    val toks = tWide(s, dir, "documents")
-      .select(col("lang"), explode(TextFunctions.tokens(col("text"))).as("w"))
-    val c = toks.groupBy("lang", "w").agg(count(lit(1)).as("n"))
-      .persistTracked()
+    val c = tokenCounts(s, dir, "w", "n", "lang").persistTracked()
     // Vocab + the en reference counts in ONE aggregation over the
     // persisted count table (was: a distinct pass for the vocab AND a
     // separate broadcast join for the en leg — the conditional sum
@@ -1068,9 +1051,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     * one final division.
     */
   def q208_gini_tokens(s: SparkSession, dir: String): DataFrame = {
-    val wc = tWide(s, dir, "documents")
-      .select(col("lang"), explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
+    val wc = tokenCounts(s, dir, "word", "cnt", "lang")
     val w = Window.partitionBy("lang").orderBy(col("cnt").asc, col("word").asc)
     wc.withColumn("r", row_number().over(w).cast("long"))
       .groupBy("lang")
@@ -1138,10 +1119,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // arithmetic either way. The corpus explodes once, into a
     // map-side-combined aggregation; the cache shrinks from
     // occurrence-grain to lexicon×lang-grain.
-    val lw = tWide(s, dir, "documents")
-      .select(col("lang"), explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("lang", "word").agg(count(lit(1)).as("c"))
-      .persistTracked()
+    val lw = tokenCounts(s, dir, "word", "c", "lang").persistTracked()
     val vocab = lw.groupBy("word").agg(sum("c").as("cnt"))
       .orderBy(col("cnt").desc, col("word").asc).limit(500)
       .select(col("word"), lit(1L).as("in_v"))
@@ -1450,10 +1428,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     * convention; guards keep every log argument positive under ANSI.
     */
   def q271_js_divergence(s: SparkSession, dir: String): DataFrame = {
-    val counts = tWide(s, dir, "documents")
-      .select(col("source"),
-        explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("source", "word").agg(count(lit(1)).as("n"))
+    val counts = tokenCounts(s, dir, "word", "n", "source")
     val totals = counts.groupBy("source").agg(sum("n").as("tot"))
     val dense = counts.select("word").distinct()
       .crossJoin(broadcast(totals))
@@ -1483,9 +1458,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def q281_token_coverage(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.PrefixSum
-    val counts = tWide(s, dir, "documents")
-      .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
+    val counts = tokenCounts(s, dir, "word", "n")
       .withColumn("neg", -col("n"))
     val ranked = PrefixSum.globalRank(counts, Seq("neg", "word"), "r")
     val cum = PrefixSum.runningTotal(ranked, "r", "n", "cum")
@@ -2013,9 +1986,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def q360_bpe_first_merge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val wc = tWide(s, dir, "documents")
-      .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
+    val wc = tokenCounts(s, dir, "word", "n")
     operators.Bpe.learnMerges(wc, k = 1)
       .toDF("step", "left", "right", "freq")
       .orderBy("step")
@@ -2037,10 +2008,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     * ≥ 2 act on multi-char symbol states only the fold carries.
     */
   def q364_bpe_encode_k1(s: SparkSession, dir: String): DataFrame = {
-    val wc = tWide(s, dir, "documents")
-      .select(explode(TextFunctions.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-      .persistTracked()
+    val wc = tokenCounts(s, dir, "word", "n").persistTracked()
     val merges = operators.Bpe.learnMerges(wc, k = 1)
     operators.Bpe.encode(wc, merges)
       .select(col("n"), explode(col("syms")).as("subword"))
