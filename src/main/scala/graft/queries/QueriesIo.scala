@@ -663,37 +663,28 @@ private[graft] trait QueriesIo { this: Queries.type =>
     * cardinality/width numbers a columnar layout planner reads before
     * choosing an encoding — distinct count, raw vs dictionary-encoded
     * byte estimates (8-bit/16-bit/32-bit index by cardinality), and
-    * the compression ratio. One pass per column union'd into a long
-    * report (each leg is an independent map-side-combined aggregate;
-    * at 100 TB each leg reads ONLY its column from parquet). Exact
-    * integer byte arithmetic.
+    * the compression ratio. One scan reads each column once into one
+    * (column, value) histogram ([[valueCounts]], map-side combined);
+    * one fold per column gives n_rows = Σcnt, n_distinct = count(v)
+    * (nulls are rows, not values), raw bytes = Σ cnt·length(v) and the
+    * dictionary page = Σ length(v). Exact integer byte arithmetic.
     */
-  def q237_dict_advisor(s: SparkSession, dir: String): DataFrame = {
-    val p = t(s, dir, "part")
-    def leg(c: String): DataFrame =
-      p.agg(
-        count(lit(1)).as("n_rows"),
-        count_distinct(col(c)).as("n_distinct"),
-        sum(length(col(c))).as("raw_bytes"))
-        .select(lit(c).as("column_name"), col("n_rows"), col("n_distinct"),
-          col("raw_bytes"),
-          // dict page = distinct values' bytes; index stream = n_rows ×
-          // index width picked from cardinality
-          (when(col("n_distinct") <= 256, 1L)
-            .when(col("n_distinct") <= 65536, 2L).otherwise(4L)).as("idx_bytes"))
-    val legs = Seq("p_name", "p_brand", "p_type").map(leg).reduce(_ unionByName _)
-    val dicts = Seq("p_name", "p_brand", "p_type").map { c =>
-      p.select(col(c)).distinct()
-        .agg(sum(length(col(c))).as("dict_bytes"))
-        .select(lit(c).as("column_name"), col("dict_bytes"))
-    }.reduce(_ unionByName _)
-    legs.join(dicts, "column_name")
-      .withColumn("dict_total", col("dict_bytes") + col("n_rows") * col("idx_bytes"))
+  def q237_dict_advisor(s: SparkSession, dir: String): DataFrame =
+    valueCounts(t(s, dir, "part"), "column_name", "p_name", "p_brand", "p_type")
+      .groupBy("column_name")
+      .agg(
+        sum("cnt").as("n_rows"),
+        count(col("v")).as("n_distinct"),
+        sum(col("cnt") * length(col("v"))).as("raw_bytes"),
+        sum(length(col("v"))).as("dict_bytes"))
+      // dict page = distinct values' bytes; index stream = n_rows ×
+      // index width picked from cardinality
+      .withColumn("dict_total", col("dict_bytes") + col("n_rows") *
+        when(col("n_distinct") <= 256, 1L).when(col("n_distinct") <= 65536, 2L).otherwise(4L))
       .select(col("column_name"), col("n_rows"), col("n_distinct"), col("raw_bytes"),
         col("dict_total"),
         round(col("raw_bytes") / col("dict_total"), 4).as("ratio"))
       .orderBy("column_name")
-  }
 
   /** Partition-skew report for a date-partitioned write: per
     * order-month row counts with the skew diagnostics a layout planner
@@ -892,36 +883,37 @@ private[graft] trait QueriesIo { this: Queries.type =>
     * RLE would keep) — then the rule-based pick a parquet writer
     * would make (few runs → RLE, narrow dictionary → DICT, else
     * PLAIN). q237 scores dictionaries alone; this decides BETWEEN
-    * encodings, and q286's rank-adjacency equi-join supplies the
-    * at-scale run counting (storage order = orderkey rank, never a
-    * single-partition lag). Values compare as strings so one code
+    * encodings. n and n_distinct come from one (column, value)
+    * histogram ([[valueCounts]]). Storage order (the orderkey rank) is
+    * the same for every column, so one rank over the wide frame feeds
+    * one rank-adjacency equi-join (q286's at-scale run counting, never
+    * a single-partition lag) and one aggregate of the per-column run
+    * sums, unpivoted to rows. Values compare as strings so one code
     * path serves every column type; all counts exact.
     */
   def q292_codec_advisor(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.PrefixSum
-    val o = t(s, dir, "orders")
-    def audit(valCol: String, label: String): DataFrame = {
-      val vals = o.select(col("o_orderkey"), col(valCol).cast("string").as("v"))
-      val ranked = PrefixSum.globalRank(vals, Seq("o_orderkey"), "r")
-      val a = ranked.select(col("r").as("ra"), col("v").as("va"))
-      val b = ranked.select((col("r") - 1).as("ra"), col("v").as("vb"))
-      val runs = a.join(b, "ra")
-        .agg((sum(when(col("va") =!= col("vb"), 1L).otherwise(0L)) + 1).as("n_runs"))
-      val stats = vals.agg(count(lit(1)).as("n"),
-        countDistinct("v").as("n_distinct"))
-      stats.crossJoin(broadcast(runs))
-        .select(lit(label).as("col_name"), col("n"), col("n_distinct"),
-          length(bin(col("n_distinct") - 1)).cast("long").as("dict_bits"),
-          col("n_runs"),
-          round(col("n_runs") / col("n"), 6).as("run_ratio"))
-        .withColumn("advice",
-          when(col("n_runs") * 10 < col("n"), "rle")
-            .when(col("dict_bits") <= 8, "dict")
-            .otherwise("plain"))
-    }
-    audit("o_orderstatus", "orderstatus")
-      .unionByName(audit("o_orderpriority", "orderpriority"))
-      .unionByName(audit("o_custkey", "custkey"))
+    val cols = Seq("orderstatus", "orderpriority", "custkey")
+    val vals = t(s, dir, "orders")
+      .select(col("o_orderkey") +: cols.map(c => col(s"o_$c").cast("string").as(c)): _*)
+    val stats = valueCounts(vals, "col_name", cols: _*)
+      .groupBy("col_name").agg(sum("cnt").as("n"), count(col("v")).as("n_distinct"))
+    val ranked = PrefixSum.globalRank(vals, Seq("o_orderkey"), "r")
+    def side(shift: Int, tag: String): DataFrame =
+      ranked.select((col("r") - shift).as("ra") +: cols.map(c => col(c).as(tag + c)): _*)
+    val runSums = cols.map(c =>
+      (sum(when(col(s"a$c") =!= col(s"b$c"), 1L).otherwise(0L)) + 1).as(c))
+    val runs = side(0, "a").join(side(1, "b"), "ra")
+      .agg(runSums.head, runSums.tail: _*)
+      .unpivot(Array.empty[Column], "col_name", "n_runs")
+    stats.join(broadcast(runs), "col_name")
+      .select(col("col_name"), col("n"), col("n_distinct"),
+        length(bin(col("n_distinct") - 1)).cast("long").as("dict_bits"),
+        col("n_runs"),
+        round(col("n_runs") / col("n"), 6).as("run_ratio"))
+      .withColumn("advice",
+        when(col("n_runs") * 10 < col("n"), "rle")
+          .when(col("dict_bits") <= 8, "dict")
+          .otherwise("plain"))
       .orderBy("col_name")
   }
 

@@ -164,6 +164,20 @@ private[graft] trait QueriesShared { this: Queries.type =>
       .select(keys.map(col) :+ explode(TextFunctions.tokens(col("text"))).as(token): _*)
       .groupBy((keys :+ token).map(col): _*).agg(count(lit(1)).as(n))
 
+  /** One value histogram for several columns of `df`, in one scan:
+    * each listed column is cast to string, the columns are unpivoted
+    * into (`labelCol` = column name, `v`), and rows are counted per
+    * (`labelCol`, v) — (labelCol, v, cnt). DataFrame `unpivot` keeps
+    * null values (SQL `UNPIVOT` drops them), so a column's nulls form
+    * their own (column, null) group, as `groupBy(col(c))` would: Σcnt
+    * is the row count, count(v) the non-null distinct count. A table
+    * with no rows yields no groups.
+    */
+  private[graft] def valueCounts(df: DataFrame, labelCol: String, cols: String*): DataFrame =
+    df.select(cols.map(c => col(c).cast("string").as(c)): _*)
+      .unpivot(Array.empty[Column], labelCol, "v")
+      .groupBy(labelCol, "v").agg(count(lit(1)).as("cnt"))
+
   /** The first-k BPE merges learned on [[wordCountStaged]] — the
     * trained tokenizer model, STAGED per dataset dir (r14). A
     * tokenizer is trained ONCE per corpus snapshot and replayed by

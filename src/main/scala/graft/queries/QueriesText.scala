@@ -1348,30 +1348,22 @@ private[graft] trait QueriesText { this: Queries.type =>
   /** Per-column Shannon entropy over `orders` — the profiling number
     * that finds key candidates (H ≈ ln n → unique), constants (H = 0),
     * and encoding opportunities (low H → dictionary/RLE, feeding
-    * q237's advisor). Each column is one value-histogram aggregate
-    * (map-side combined) + one vocabulary-sized entropy fold; columns
-    * union into a long report, each leg reading ONLY its column.
-    * ln per the engine-agreement precedent, rounded; n and distinct
-    * exact.
+    * q237's advisor). One scan builds one (column, value) histogram
+    * ([[valueCounts]], map-side combined); the per-column totals
+    * (n = Σcnt, k = histogram groups, the null group included) are a
+    * broadcast aggregate of it, and one vocabulary-sized entropy fold
+    * per column reads both. ln per the engine-agreement precedent,
+    * rounded; n and distinct exact.
     */
   def q247_column_entropy(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    def leg(c: String): DataFrame = {
-      val hist = o.groupBy(col(c).cast("string").as("v"))
-        .agg(count(lit(1)).as("cnt"))
-      val tot = hist.agg(sum("cnt").as("n"), count(lit(1)).as("k"))
-      hist.crossJoin(broadcast(tot))
-        .agg(
-          first(col("n")).as("n_rows"),
-          first(col("k")).as("n_distinct"),
-          round(-sum((col("cnt") / col("n")) * log(col("cnt") / col("n"))), 4)
-            .as("entropy_nats"))
-        .select(lit(c).as("column_name"), col("n_rows"), col("n_distinct"),
-          col("entropy_nats"),
-          round(col("entropy_nats") / log(col("n_rows")), 4).as("key_score"))
-    }
-    Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-      .map(leg).reduce(_ unionByName _)
+    val hist = valueCounts(t(s, dir, "orders"), "column_name",
+      "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+    val tot = hist.groupBy("column_name").agg(sum("cnt").as("n"), count(lit(1)).as("k"))
+    hist.join(broadcast(tot), "column_name")
+      .groupBy(col("column_name"), col("n").as("n_rows"), col("k").as("n_distinct"))
+      .agg(round(-sum((col("cnt") / col("n")) * log(col("cnt") / col("n"))), 4)
+        .as("entropy_nats"))
+      .withColumn("key_score", round(col("entropy_nats") / log(col("n_rows")), 4))
       .orderBy("column_name")
   }
 

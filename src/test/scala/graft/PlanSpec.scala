@@ -144,8 +144,6 @@ class PlanSpec extends SparkSpec {
       "q238_partition_skew",
       // q239/q242: 1-row broadcast frontier/boundary (q215's pattern)
       "q239_diff_in_diff", "q242_feature_matrix",
-      // q247: per-column 1-row broadcast totals (q101's pattern, ×4 legs)
-      "q247_column_entropy",
       // q254: day-grain C(n,2) pair self-join (bounded by calendar days)
       // + 1-row broadcast pair count
       "q254_theil_sen",
@@ -189,9 +187,9 @@ class PlanSpec extends SparkSpec {
       "q287_sax_words", "q288_session_timeout",
       // q289: 3×10 bounded type×decile grid + 1-row total/best
       "q289_info_gain_split",
-      // q291/q292: 1-row count/run aggregates crossJoined into the
-      // advisor rows (q145's pattern)
-      "q291_join_order_advisor", "q292_codec_advisor",
+      // q291: 1-row count aggregates crossJoined into the advisor rows
+      // (q145's pattern)
+      "q291_join_order_advisor",
       // q293/q294: 1-row broadcast catalog/revenue totals
       "q293_powerlaw_alpha", "q294_catalog_coldstart",
       // q295: 1-row broadcast count + median pick (q269's pattern)
@@ -327,6 +325,30 @@ class PlanSpec extends SparkSpec {
       val scans = "documents\\.parquet".r.findAllIn(p).size
       assert(scans <= 1, s"$name re-scans documents ($scans sites):\n$p")
     }
+  }
+
+  test("q237/q247 scan their table once; q292 at most 2 scans and 2 windows") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // One (column, value) histogram per report, not one scan → aggregate
+    // pipeline per column. Read from the executed (AQE final) plan; the
+    // shuffle and join counts are left unpinned, since AQE picks them
+    // per run on small inputs.
+    def executed(name: String) = {
+      val df = Queries.all(name)(spark, sf())
+      df.queryExecution.toRdd.foreachPartition(_ => ())
+      PlanShape.nodes(df.queryExecution.executedPlan)
+    }
+    def scans(ns: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+      ns.count(_.isInstanceOf[FileSourceScanExec])
+    for (name <- Seq("q237_dict_advisor", "q247_column_entropy")) {
+      val n = scans(executed(name))
+      assert(n == 1, s"$name scans its table $n times")
+    }
+    val q292 = executed("q292_codec_advisor")
+    val windows = q292.count(_.isInstanceOf[WindowExec])
+    assert(scans(q292) <= 2 && windows <= 2,
+      s"q292: ${scans(q292)} scans, $windows windows")
   }
 
   test("q192 DSIR: scoring join broadcasts the 4096-bucket LM table; top-k is TakeOrdered") {
