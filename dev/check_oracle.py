@@ -5,13 +5,21 @@
 # query, and compares to the engine parquet: columns sorted by name,
 # row count, then stringified cell equality (mimics the correctness
 # gate). Requires driver-side python deps (duckdb, pandas, pyarrow).
-import duckdb, json, glob, sys
+import duckdb, json, glob, os, sys
 import pandas as pd
 sfdir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
 outdir = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_out'
 con = duckdb.connect()
+# A table is one parquet file, or a directory of part files as Spark
+# writes it (perfbench's Gen.tables); a generated dir holds only the
+# tables it was asked for, so a missing table is skipped.
 for tbl in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
-    con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM '{sfdir}/{tbl}.parquet'")
+    path = f'{sfdir}/{tbl}.parquet'
+    if os.path.isdir(path):
+        path = f'{path}/*.parquet'
+    elif not os.path.exists(path):
+        continue
+    con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM '{path}'")
 oracle = json.load(open(f'{outdir}/oracle_sql.json'))
 # Optional 3rd arg: comma-list of query names to check (default: all).
 if len(sys.argv) > 3:
